@@ -90,7 +90,8 @@ def register(name: str, oracle: str | None, doc: str = ""):
 #: re-queuing it every round would burn window slots for zero new
 #: information; its rows-only smoke still recurs on the normal cycle). A
 #: hash-FAIL resets the rank to 0: the contract was broken there, and the
-#: fix must re-enter the window first.
+#: fix must re-enter the window first. A rewrite of an entry's code resets
+#: it to 0 for the same reason.
 LAST_DRIVER_CHECK: dict[str, int] = {
     "a10_table_profile": 17,
     "a11_heavy_hitters": 15,
@@ -306,16 +307,16 @@ LAST_DRIVER_CHECK: dict[str, int] = {
     "s7_partitioned_sink": 16,
     "s8_csv_overwrite_sink": 16,
     "s9_staging_rekey": 16,
-    "t10_stream_dynamic_sessions": 16,
+    "t10_stream_dynamic_sessions": 0,
     "t11_stream_geofence": 17,
-    "t12_stream_late_sessions": 17,
+    "t12_stream_late_sessions": 0,
     "t13_gap_fill": 17,
     "t14_stream_ohlc": 12,
     "t15_stream_snapshot_enrich": 12,
     "t16_stream_restart": 14,
     "t17_stream_quarantine": 15,
-    "t18_stream_attribution": 16,
-    "t19_stream_sliding_kmv": 17,
+    "t18_stream_attribution": 0,
+    "t19_stream_sliding_kmv": 0,
     "t1_streaming_tumbling": 12,
     "t2_streaming_dedup": 12,
     "t3_cdc_promote": 15,

@@ -979,6 +979,7 @@ def _events_dir_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
 def t10_stream_dynamic_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from citydata_etl_spark.sources.readers import read_testdata as _rt
     from citydata_etl_spark.streaming.stateful import (
+        N_SHARDS,
         streaming_dynamic_gap_sessions,
     )
     from citydata_etl_spark.streaming.windows import read_events_stream
@@ -990,9 +991,9 @@ def t10_stream_dynamic_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.select("event_id", "ts", "user_id", "event_type")
     )
     name = f"t10_stream_dynsess_{next(_STREAM_SEQ)}"
-    # r18: state is SHARD-keyed (64 shards — stateful.py), so the state
+    # State is SHARD-keyed (stateful.N_SHARDS shards), so the state
     # key space is the fixed shard count, not user cardinality, and the
-    # partition count derives from it: state_partitions_for(64, cores)
+    # partition count derives from it: state_partitions_for(N_SHARDS, cores)
     # = 4 (the per-shard kernel is a light 5-int fold per user — no
     # per_group_python factor, same rationale as before sharding), and
     # the post-shard sweep measured 4/8/16 flat within noise
@@ -1004,7 +1005,7 @@ def t10_stream_dynamic_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.writeStream.outputMode("append")
         .format("memory")
         .queryName(name),
-        est_active_keys=64,
+        est_active_keys=N_SHARDS,
     )
     return spark.sql(f"SELECT * FROM {name} WHERE user_id >= 0")
 
@@ -1250,7 +1251,7 @@ def t12_stream_late_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Partition history: the per-USER-group form's knee was key-
     # cardinality-dependent (r15 rehearsal: 16 at 1.5k keys, moving
     # right with keys; state_partitions_for encoded it). r18: state is
-    # SHARD-keyed (64 shards — stateful.py), so the key space is the
+    # SHARD-keyed (stateful.N_SHARDS shards), so the key space is the
     # fixed shard count and the old derivation no longer applies; the
     # post-shard sweep at sf0.1 measured 4/8/16/32 -> 3.36/3.07/3.48/
     # 4.55 s (best-of-3 warm, twice, same ordering both times): 8 = one
@@ -1793,7 +1794,7 @@ def t19_stream_sliding_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # slots, best by 3.4x at 80k, with state_partitions_for's would-be
     # 64 1.6-1.7x worse (tiny per-group kernels: partitions bought no
     # kernel parallelism, only store commits). r18: state is SHARD-
-    # keyed (64 shards — stateful.py:streaming_slot_kmv), which
+    # keyed (stateful.N_SHARDS shards), which
     # removed the per-group machinery that sweep was probing; the
     # post-shard re-sweep at sf0.1 read 4/8/16 -> 2.00/1.95/2.00 s
     # (best-of-3 warm, flat within noise), so 16 stands. The shard

@@ -77,25 +77,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    width: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """T5: sliding windows — each event contributes to width/slide windows."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("window_start"),
-            "n",
-            "total_value",
-        )
-    )
-
-
 def session_counts(
     events: DataFrame, gap: str = "5 minutes", watermark: str = "1 hour"
 ) -> DataFrame:

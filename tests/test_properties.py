@@ -803,48 +803,28 @@ def test_pagerank_matches_python_reference(spark, raw_edges, n_iter):
 def test_buffered_sessions_equal_batch_fold_under_reordering(
     events, delay_s, n_batches
 ):
-    """Pure state-machine simulation of the buffered sessionizer: events
-    are dealt into arrival batches ARBITRARILY (any order), the watermark
-    advances as the engine's would (max event time seen - delay, never
-    retreating), late events BELOW the watermark are dropped exactly as
-    the engine drops them, and a final far-future watermark flushes the
-    tail. The concatenated emissions must equal the batch dynamic-gap
-    fold over the admitted events — for every random interleaving."""
-    import pandas as pd
-
-    from citydata_etl_spark.streaming.stateful import (
-        make_buffered_session_group,
+    """Pure state-machine simulation of the buffered sessionizer's shard
+    kernel on one user: events are dealt into arrival batches
+    ARBITRARILY (any order), the watermark advances as the engine's
+    would (max event time seen - delay, never retreating), late events
+    BELOW the watermark are dropped exactly as the engine drops them,
+    and a final far-future watermark flushes the tail. The concatenated
+    emissions must equal the batch dynamic-gap fold over the admitted
+    events — for every random interleaving."""
+    from citydata_etl_spark.streaming.stateful import _BUFFERED_SESSIONS
+    from tests.test_streaming import (
+        _FakeShardState,
+        _batch_sessions,
+        _emitted,
     )
 
-    class _S:
-        def __init__(self):
-            self._v = None
-            self.hasTimedOut = False
-            self.wm_ms = 0
-
-        exists = property(lambda s: s._v is not None)
-        get = property(lambda s: s._v)
-
-        def update(self, v):
-            self._v = v
-
-        def remove(self):
-            self._v = None
-
-        def getCurrentWatermarkMs(self):
-            return self.wm_ms
-
-        def setTimeoutTimestamp(self, ts):
-            pass
-
     rows = [
-        (t, i, "error" if err else "view")
+        (1, t, i, 300 if err else 1800)
         for i, (t, err) in enumerate(events)
     ]
     # deal rows round-robin into arrival batches (arbitrary disorder)
     batches = [rows[i::n_batches] for i in range(n_batches)]
-    fn = make_buffered_session_group(error_gap_s=300, default_gap_s=1800)
-    state = _S()
+    state = _FakeShardState()
     emitted = []
     admitted = []
     wm_s = 0
@@ -852,39 +832,18 @@ def test_buffered_sessions_equal_batch_fold_under_reordering(
         # engine contract: rows at/after the watermark are admitted; the
         # watermark then advances to max(event time) - delay AFTER the
         # batch, never retreating
-        live = [r for r in b if r[0] >= wm_s]
+        live = [r for r in b if r[1] >= wm_s]
         admitted += live
         state.wm_ms = wm_s * 1000
         if live:
-            pdf = pd.DataFrame(
-                live, columns=["tsec", "event_id", "event_type"]
-            )
-            for out in fn((1,), iter([pdf]), state):
-                emitted += [tuple(r) for r in out.itertuples(index=False)]
-        wm_s = max([wm_s] + [r[0] - delay_s for r in b])
+            emitted += _emitted(_BUFFERED_SESSIONS, state, live)
+        wm_s = max([wm_s] + [r[1] - delay_s for r in b])
     # final flush: watermark far past every horizon
     state.wm_ms = 10**9 * 1000
-    state.hasTimedOut = True
-    for out in fn((1,), iter([]), state):
-        emitted += [tuple(r) for r in out.itertuples(index=False)]
+    emitted += _emitted(_BUFFERED_SESSIONS, state, [])
 
     # reference: batch fold over the admitted events in (tsec, id) order
-    want = []
-    sid = -1
-    start = end = prev_thr = None
-    n = 0
-    for t, eid, etype in sorted(admitted, key=lambda r: (r[0], r[1])):
-        thr = 300 if etype == "error" else 1800
-        if start is None or t - end > prev_thr:
-            if start is not None:
-                want.append((1, sid, n, start, end))
-            sid += 1
-            start, n = t, 0
-        end = t
-        n += 1
-        prev_thr = thr
-    if start is not None:
-        want.append((1, sid, n, start, end))
+    want = _batch_sessions(admitted)
     assert emitted == want
 
 

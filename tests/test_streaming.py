@@ -536,28 +536,23 @@ def test_streaming_dynamic_sessions_across_microbatches(spark, tmp_path):
     with the batch dynamic-gap sessionizer. This is the path the
     single-file catalog entry cannot exercise."""
     import os
+    import time
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from citydata_etl_spark.operators.aggregates import sessionize_dynamic
     from citydata_etl_spark.plans.queries_time import (
         _await_with_state_partitions,
     )
-    from citydata_etl_spark.sources.readers import read_testdata
     from citydata_etl_spark.streaming.stateful import (
         streaming_dynamic_gap_sessions,
     )
     from citydata_etl_spark.streaming.windows import read_events_stream
 
-    src = pq.read_table(f"{SF_ORACLE}/events.parquet")
     # time-ordered quarter files: a user's session can span several
-    sorted_tbl = src.sort_by([("ts", "ascending"), ("event_id", "ascending")])
+    sorted_tbl = _oracle_events()
     n = sorted_tbl.num_rows
     d = str(tmp_path / "feed")
     os.makedirs(d)
-    import time
-
     base = time.time() - 1000
     for i in range(4):
         part = sorted_tbl.slice(i * n // 4, (i + 1) * n // 4 - i * n // 4)
@@ -567,21 +562,8 @@ def test_streaming_dynamic_sessions_across_microbatches(spark, tmp_path):
         # (it sorts by modification time): data files in time order, the
         # sentinel last
         os.utime(p, (base + i, base + i))
-    row = sorted_tbl.slice(0, 1).to_pylist()[0]
-    max_ts = pa.compute.max(src["ts"]).as_py()
-    import datetime
-
-    row["ts"] = (
-        max_ts + datetime.timedelta(days=3650)
-        if isinstance(max_ts, datetime.datetime)
-        else max_ts + 3650 * 86400 * 10**9
-    )
-    row["user_id"] = -1
-    row["event_id"] = -1
     sentinel_path = os.path.join(d, "part-9-sentinel.parquet")
-    pq.write_table(
-        pa.Table.from_pylist([row], schema=src.schema), sentinel_path
-    )
+    pq.write_table(_sentinel(sorted_tbl), sentinel_path)
     os.utime(sentinel_path, (base + 9, base + 9))
 
     stream = read_events_stream(spark, d, max_files_per_trigger=1)
@@ -594,31 +576,8 @@ def test_streaming_dynamic_sessions_across_microbatches(spark, tmp_path):
         out.writeStream.outputMode("append").format("memory")
         .queryName(name),
     )
-    got = _rows(
-        spark.sql(f"SELECT * FROM {name} WHERE user_id >= 0"),
-        ["user_id", "session_id", "n_events", "session_start",
-         "session_end"],
-    )
-
-    events = read_testdata(spark, SF_ORACLE, "events").select(
-        "user_id", "event_id",
-        F.floor(F.col("ts").cast("double")).cast("long").alias("tsec"),
-        F.when(F.col("event_type") == "error", 300).otherwise(1800)
-        .alias("thr"),
-    )
-    s = sessionize_dynamic(events, "user_id", "tsec", F.col("thr"),
-                           "event_id")
-    batch = s.groupBy("user_id", "session_id").agg(
-        F.count("*").alias("n_events"),
-        F.min("tsec").alias("session_start"),
-        F.max("tsec").alias("session_end"),
-    )
-    want = _rows(
-        batch,
-        ["user_id", "session_id", "n_events", "session_start",
-         "session_end"],
-    )
-    assert got == want
+    got = _session_tuples(spark.sql(f"SELECT * FROM {name}").collect())
+    assert got == _batch_twin_sessions(spark)
 
 
 def test_dynamic_gap_sessions_rejects_positive_watermark_delay(spark):
@@ -644,91 +603,56 @@ def test_dynamic_gap_sessions_rejects_positive_watermark_delay(spark):
 
 
 def test_buffered_session_group_merges_late_event():
-    """The buffered sessionizer's core contract, driven directly: a LATE
-    event arriving a batch later must merge into the session it belongs
-    to by EVENT time (splitting what naive one-open-session state would
-    have already decided), sessions emit only once the watermark passes
-    their gap horizon, and ids stay sequential."""
-    import pandas as pd
-
+    """The buffered sessionizer's core contract, driven directly on a
+    one-user shard: a LATE event arriving a batch later must merge into
+    the session it belongs to by EVENT time (splitting what naive
+    one-open-session state would have already decided), sessions emit
+    only once the watermark passes their gap horizon, and ids stay
+    sequential."""
     from citydata_etl_spark.streaming.stateful import (
-        _unpack_events,
-        make_buffered_session_group,
+        _BUFFERED_SESSIONS,
+        _FAR_MS,
     )
 
-    class _FakeSessionState:
-        def __init__(self):
-            self._value = None
-            self.hasTimedOut = False
-            self.wm_ms = 0
-            self.timeout_ts = None
-
-        @property
-        def exists(self):
-            return self._value is not None
-
-        @property
-        def get(self):
-            return self._value
-
-        def update(self, v):
-            self._value = v
-
-        def remove(self):
-            self._value = None
-
-        def getCurrentWatermarkMs(self):
-            return self.wm_ms
-
-        def setTimeoutTimestamp(self, ts):
-            self.timeout_ts = ts
-
-    def batch(rows):
-        return pd.DataFrame(
-            rows, columns=["tsec", "event_id", "event_type"]
-        )
-
-    fn = make_buffered_session_group(error_gap_s=300, default_gap_s=1800)
-    state = _FakeSessionState()
+    fn = _BUFFERED_SESSIONS
+    state = _FakeShardState()
 
     # batch 1: two events 4000s apart -> would fold to two sessions, but
     # nothing is final yet (watermark 0)
-    out = list(fn((7,), iter([batch([(1000, 1, "view"), (5000, 2, "view")])]),
-                  state))
+    out = _emitted(fn, state, [(7, 1000, 1, 1800), (7, 5000, 2, 1800)])
     assert out == []
-    assert state.get[0] == -1
-    assert len(_unpack_events(state.get[1])[0]) == 2
+    (sid, _gc), (ts_buf, _, _) = _user_state(state, 7)
+    assert sid == -1
+    assert len(ts_buf) == 2
 
     # batch 2: a LATE event at t=2000 arrives; watermark has advanced to
     # 4000s. Sorted buffer folds (1000,2000)(5000): the late event MERGED
     # into session 0, whose horizon 2000+1800 < 4000 makes it final.
     state.wm_ms = 4000 * 1000
-    out = list(fn((7,), iter([batch([(2000, 3, "view")])]), state))
-    rows = [tuple(r) for r in out[0].itertuples(index=False)]
-    assert rows == [(7, 0, 2, 1000, 2000)]
+    out = _emitted(fn, state, [(7, 2000, 3, 1800)])
+    assert out == [(7, 0, 2, 1000, 2000)]
     # trailing session still buffered
-    assert list(_unpack_events(state.get[1])[0]) == [5000]
+    assert list(_user_state(state, 7)[1][0]) == [5000]
     # timeout armed at the remaining session's horizon
     assert state.timeout_ts == (5000 + 1800) * 1000
 
-    # batch 3: pure timeout past the horizon flushes the tail with the
-    # NEXT sequential id
+    # batch 3: a data-less invocation past the horizon flushes the tail
+    # with the NEXT sequential id
     state.wm_ms = 10_000 * 1000
-    state.hasTimedOut = True
-    out = list(fn((7,), iter([]), state))
-    rows = [tuple(r) for r in out[0].itertuples(index=False)]
-    assert rows == [(7, 1, 1, 5000, 5000)]
+    out = _emitted(fn, state, [])
+    assert out == [(7, 1, 1, 5000, 5000)]
     # tombstone keeps the counter
-    assert list(_unpack_events(state.get[1])[0]) == []
-    assert state.get[0] == 1
+    (sid, _gc), (ts_buf, _, _) = _user_state(state, 7)
+    assert list(ts_buf) == []
+    assert sid == 1
 
-    # batch 4: the empty-buffer tombstone's far timeout expires with no
-    # new events -> full gc (without it, per-user state would re-arm and
-    # leak forever on an unbounded stream)
-    state.hasTimedOut = True
-    out = list(fn((7,), iter([]), state))
+    # batch 4: once the watermark passes the tombstone's far deadline
+    # with no new events -> full gc (without it, per-user state would
+    # re-arm and leak forever on an unbounded stream)
+    state.wm_ms = 10_000 * 1000 + _FAR_MS + 1
+    out = _emitted(fn, state, [])
     assert out == []
-    assert state.get is None
+    assert state.get is None and state.removed
 
 
 def test_buffered_session_state_bound_under_adversarial_lateness():
@@ -742,18 +666,13 @@ def test_buffered_session_state_bound_under_adversarial_lateness():
     only events of sessions whose gap horizon the watermark has not
     passed remain, i.e. every retained event's ts >= watermark -
     (gap + session span), and the retained COUNT never exceeds the
-    events that window can contain (vs 2000 processed). Then flush via
-    the event-time timeout and assert the emitted sessions equal the
-    batch fold exactly — late-heavy delivery must change NOTHING about
-    the output, only the (bounded) buffering cost."""
-    import pandas as pd
+    events that window can contain (vs 2000 processed). Then flush with
+    a far watermark and assert the emitted sessions equal the batch
+    fold exactly — late-heavy delivery must change NOTHING about the
+    output, only the (bounded) buffering cost."""
+    from citydata_etl_spark.streaming.stateful import _BUFFERED_SESSIONS
 
-    from citydata_etl_spark.streaming.stateful import (
-        _unpack_events,
-        make_buffered_session_group,
-    )
-
-    GAP = 300          # default_gap_s (no error events in this feed)
+    GAP = 300          # every event's gap threshold
     SPAN = 54          # burst span: 10 events, 6 s apart
     DELAY = 120        # watermark delay the arrival shuffle saturates
     N_BURSTS, PER = 200, 10
@@ -774,63 +693,31 @@ def test_buffered_session_state_bound_under_adversarial_lateness():
 
     arrivals = sorted(events, key=lambda te: (te[0] + disp(te[1]), te[1]))
 
-    class _FakeSessionState:
-        def __init__(self):
-            self._value = None
-            self.hasTimedOut = False
-            self.wm_ms = 0
-            self.timeout_ts = None
-
-        @property
-        def exists(self):
-            return self._value is not None
-
-        @property
-        def get(self):
-            return self._value
-
-        def update(self, v):
-            self._value = v
-
-        def remove(self):
-            self._value = None
-
-        def getCurrentWatermarkMs(self):
-            return self.wm_ms
-
-        def setTimeoutTimestamp(self, ts):
-            self.timeout_ts = ts
-
-    fn = make_buffered_session_group(error_gap_s=GAP, default_gap_s=GAP)
-    state = _FakeSessionState()
+    fn = _BUFFERED_SESSIONS
+    state = _FakeShardState()
     emitted = []
     max_retained = 0
     BATCH = 50
     wm_s = 0
     for i in range(0, len(arrivals), BATCH):
         chunk = arrivals[i:i + BATCH]
-        pdf = pd.DataFrame(
-            [(ts, e, "view") for ts, e in chunk],
-            columns=["tsec", "event_id", "event_type"],
-        )
         state.wm_ms = wm_s * 1000
-        for out in fn((7,), iter([pdf]), state):
-            emitted.extend(tuple(r) for r in out.itertuples(index=False))
+        emitted += _emitted(
+            fn, state, [(7, ts, e, GAP) for ts, e in chunk]
+        )
         # Spark semantics: next batch's watermark = this batch's max
         # event time minus the delay (non-decreasing)
         wm_s = max(wm_s, max(ts for ts, _ in chunk) - DELAY)
-        ts_ret = _unpack_events(state.get[1])[0]
+        ts_ret = _user_state(state, 7)[1][0]
         max_retained = max(max_retained, len(ts_ret))
         if len(ts_ret):
             # documented window invariant: a retained event belongs to
             # a session whose horizon >= watermark, so its ts can be no
             # older than wm - (gap + span)
             assert ts_ret.min() >= state.wm_ms // 1000 - (GAP + SPAN)
-    # flush the tail via the event-time timeout
+    # flush the tail with a watermark past every horizon
     state.wm_ms = (events[-1][0] + GAP + DELAY + 1) * 1000
-    state.hasTimedOut = True
-    for out in fn((7,), iter([]), state):
-        emitted.extend(tuple(r) for r in out.itertuples(index=False))
+    emitted += _emitted(fn, state, [])
 
     # the bound, quantified: the retention window (gap + span), plus
     # the watermark lag (delay), plus the event-time width of one
@@ -1080,11 +967,11 @@ def test_state_partitions_sizing_function():
 
 
 class _FakeShardState:
-    """Minimal GroupState stand-in for the r18 shard kernels."""
+    """Minimal GroupState stand-in for driving the shard kernels
+    (streaming/stateful.py:_ShardKernel) without Spark."""
 
     def __init__(self):
         self._value = None
-        self.hasTimedOut = False
         self.wm_ms = 0
         self.timeout_ts = None
         self.removed = False
@@ -1112,178 +999,143 @@ class _FakeShardState:
         self.timeout_ts = ts
 
 
-def test_session_shard_group_multi_user_flush_and_gc():
-    """The r18 shard-keyed zero-delay sessionizer, driven directly: two
-    users share one shard blob; an in-data gap closes a session exactly
-    like the per-user reference; the flush pass emits an open session
-    only once the watermark STRICTLY passes its horizon (becoming a
-    counter-preserving tombstone), and an expired tombstone gc's while
-    the other user's state survives."""
+def _emitted(fn, state, rows):
+    """One invocation of a sessionizer shard kernel over the
+    (user_id, tsec, event_id, thr) `rows` — none: a data-less
+    (timeout) invocation — returning the emitted rows."""
     import pandas as pd
 
+    cols = ["user_id", "tsec", "event_id", "thr"]
+    pdfs = [pd.DataFrame(rows, columns=cols)] if rows else []
+    return [
+        tuple(r)
+        for df in fn((0,), iter(pdfs), state)
+        for r in df.itertuples(index=False)
+    ]
+
+
+def _user_state(state, user):
+    """One key's (fixed ints, buffers) record from a shard blob."""
+    from citydata_etl_spark.streaming.stateful import _unpack
+
+    return _unpack(state.get[0])[user]
+
+
+def _batch_sessions(rows):
+    """The batch dynamic-gap fold over (user_id, tsec, event_id, thr)
+    rows, per user in (tsec, event_id) order: sorted
+    (user_id, session_id, n_events, session_start, session_end)."""
+    want = []
+    for user in sorted({r[0] for r in rows}):
+        sid, start, end, prev_thr, n = -1, None, None, None, 0
+        for _, t, _, thr in sorted(r for r in rows if r[0] == user):
+            if start is None or t - end > prev_thr:
+                if start is not None:
+                    want.append((user, sid, n, start, end))
+                sid += 1
+                start, n = t, 0
+            end = t
+            n += 1
+            prev_thr = thr
+        want.append((user, sid, n, start, end))
+    return sorted(want)
+
+
+def test_session_shard_group_multi_user_flush_and_gc():
+    """The shard-keyed zero-delay sessionizer, driven directly: two
+    users share one shard blob; an in-data gap closes a session exactly
+    like the batch fold; the flush emits an open session only once the
+    watermark STRICTLY passes its horizon (becoming a counter-preserving
+    tombstone), and an expired tombstone gc's while the other user's
+    state survives."""
     from citydata_etl_spark.streaming.stateful import (
-        make_session_shard_group,
+        _FAR_MS,
+        _OPEN_SESSIONS,
+        _unpack,
     )
 
-    def batch(rows):
-        return pd.DataFrame(
-            rows, columns=["user_id", "tsec", "event_id", "event_type"]
-        )
-
-    fn = make_session_shard_group(error_gap_s=300, default_gap_s=1800)
+    fn = _OPEN_SESSIONS
     state = _FakeShardState()
 
     # user 1: events 4000s apart -> first session closes IN-DATA;
-    # user 2: one event -> open session only
-    out = [
-        r
-        for df in fn(
-            (0,),
-            iter([batch([(1, 1000, 1, "view"), (1, 5000, 2, "view"),
-                         (2, 1200, 3, "error")])]),
-            state,
-        )
-        for r in df.itertuples(index=False)
-    ]
-    assert [(r.user_id, r.session_id, r.n_events, r.session_start,
-             r.session_end) for r in out] == [(1, 0, 1, 1000, 1000)]
+    # user 2: one error event -> open session only
+    out = _emitted(
+        fn, state, [(1, 1000, 1, 1800), (1, 5000, 2, 1800), (2, 1200, 3, 300)]
+    )
+    assert out == [(1, 0, 1, 1000, 1000)]
     # open: user1 (start 5000, thr 1800 -> horizon 6800), user2 (1200,
     # error thr 300 -> horizon 1500). Shard timeout = min horizon.
     assert state.timeout_ts == 1500 * 1000
 
+    # the watermark AT user2's horizon is not past it: nothing flushes
+    state.wm_ms = 1_500_000
+    assert _emitted(fn, state, []) == []
+
     # watermark passes user2's horizon only: user2 flushes, user1 stays
-    state.hasTimedOut = True
     state.wm_ms = 1_500_001
-    out = [
-        r
-        for df in fn((0,), iter([]), state)
-        for r in df.itertuples(index=False)
-    ]
-    assert [(r.user_id, r.session_id) for r in out] == [(2, 0)]
+    out = _emitted(fn, state, [])
+    assert [(r[0], r[1]) for r in out] == [(2, 0)]
     assert state.timeout_ts == 6800 * 1000
 
     # watermark passes user1's horizon; user2 is now a tombstone whose
     # far deadline is ~1000 days out -> survives, preserving its sid
     state.wm_ms = 6_800_001
-    out = [
-        r
-        for df in fn((0,), iter([]), state)
-        for r in df.itertuples(index=False)
-    ]
-    assert [(r.user_id, r.session_id) for r in out] == [(1, 1)]
+    out = _emitted(fn, state, [])
+    assert [(r[0], r[1]) for r in out] == [(1, 1)]
 
     # a returning user 2 continues its counter (no id reuse)
-    state.hasTimedOut = False
-    out = [
-        r
-        for df in fn((0,), iter([batch([(2, 7000, 9, "view")])]), state)
-        for r in df.itertuples(index=False)
-    ]
+    out = _emitted(fn, state, [(2, 7000, 9, 1800)])
     assert out == []  # reopened, nothing final
-    state.hasTimedOut = True
     state.wm_ms = (7000 + 1800) * 1000 + 1
-    out = [
-        r
-        for df in fn((0,), iter([]), state)
-        for r in df.itertuples(index=False)
-    ]
-    assert [(r.user_id, r.session_id) for r in out] == [(2, 1)]
+    out = _emitted(fn, state, [])
+    assert [(r[0], r[1]) for r in out] == [(2, 1)]
+
+    # past user1's tombstone deadline only: user1 gc's, user2 survives
+    state.wm_ms = 6_800_001 + _FAR_MS + 1
+    assert _emitted(fn, state, []) == []
+    assert set(_unpack(state.get[0])) == {2}
+    assert _user_state(state, 2)[0][0] == 1
 
 
 def test_buffered_session_shard_group_equals_per_user_reference():
-    """Equivalence pin for the r18 shard-keyed buffered sessionizer:
-    the same out-of-order multi-user feed, stepped through the same
-    watermark schedule, must emit the SAME session set as the per-user
-    reference kernel (make_buffered_session_group) — including
-    straggler merges across batches and final-flush ordering. Emission
-    may land in an earlier batch (the shard is invoked whenever any of
-    its users needs attention); the set must be identical."""
-    import pandas as pd
+    """Equivalence pin for the shard-keyed buffered sessionizer: a
+    genuinely reordered multi-user feed, stepped through a watermark
+    schedule (invoking the shard without data only once its timeout is
+    due, as the engine does), must emit exactly the per-user batch fold
+    of the same events — including straggler merges across batches and
+    final-flush ordering."""
+    from citydata_etl_spark.streaming.stateful import _BUFFERED_SESSIONS
 
-    from citydata_etl_spark.streaming.stateful import (
-        make_buffered_session_group,
-        make_buffered_session_shard_group,
-    )
-
-    # (user, tsec, event_id, event_type) per batch, genuinely reordered
+    # (user, tsec, event_id, thr) per batch, genuinely reordered
     batches = [
-        [(1, 1000, 1, "view"), (2, 1100, 2, "view"), (1, 9000, 3, "view")],
-        [(1, 2000, 4, "error"), (2, 1200, 5, "view"), (3, 50, 6, "view")],
-        [(2, 9999, 7, "view"), (1, 9100, 8, "view")],
+        [(1, 1000, 1, 1800), (2, 1100, 2, 1800), (1, 9000, 3, 1800)],
+        [(1, 2000, 4, 300), (2, 1200, 5, 1800), (3, 50, 6, 1800)],
+        [(2, 9999, 7, 1800), (1, 9100, 8, 1800)],
         [],  # pure watermark-advance batch
     ]
     wms = [0, 3_000_000, 9_500_000, 100_000_000_000]
 
-    def run_reference():
-        per_user: dict = {}
-        fn = make_buffered_session_group(300, 1800)
-        emitted = []
-        users = sorted({r[0] for b in batches for r in b})
-        for b, wm in zip(batches, wms):
-            by_user: dict = {}
-            for (u, t, e, k) in b:
-                by_user.setdefault(u, []).append((t, e, k))
-            for u in users:
-                st = per_user.setdefault(u, _FakeShardState())
-                st.wm_ms = wm
-                rows = by_user.get(u)
-                if rows is not None:
-                    st.hasTimedOut = False
-                    pdf = pd.DataFrame(
-                        rows, columns=["tsec", "event_id", "event_type"]
-                    )
-                    outs = fn((u,), iter([pdf]), st)
-                elif st.exists and st.timeout_ts is not None and (
-                    st.timeout_ts < wm
-                ):
-                    st.hasTimedOut = True
-                    outs = fn((u,), iter([]), st)
-                else:
-                    outs = []
-                for df in outs:
-                    emitted += [tuple(r) for r in df.itertuples(False)]
-        return sorted(emitted)
-
-    def run_shard():
-        fn = make_buffered_session_shard_group(300, 1800)
-        st = _FakeShardState()
-        emitted = []
-        for b, wm in zip(batches, wms):
-            st.wm_ms = wm
-            if b:
-                st.hasTimedOut = False
-                pdf = pd.DataFrame(
-                    b,
-                    columns=["user_id", "tsec", "event_id", "event_type"],
-                )
-                outs = fn((0,), iter([pdf]), st)
-            elif st.exists and st.timeout_ts is not None and (
-                st.timeout_ts < wm
-            ):
-                st.hasTimedOut = True
-                outs = fn((0,), iter([]), st)
-            else:
-                outs = []
-            for df in outs:
-                emitted += [tuple(r) for r in df.itertuples(False)]
-        return sorted(emitted)
-
-    ref, got = run_reference(), run_shard()
-    assert ref == got
-    assert len(ref) >= 4  # the schedule genuinely closes sessions
+    st = _FakeShardState()
+    emitted = []
+    for b, wm in zip(batches, wms):
+        st.wm_ms = wm
+        if b or (st.exists and st.timeout_ts < wm):
+            emitted += _emitted(_BUFFERED_SESSIONS, st, b)
+    want = _batch_sessions([r for b in batches for r in b])
+    assert sorted(emitted) == want
+    assert len(want) >= 4  # the schedule genuinely closes sessions
 
 
 def test_kmv_shard_group_per_slot_buffers():
-    """The r18 shard-keyed KMV kernel: per-slot buffers inside one
-    shard blob must merge/truncate exactly like the per-slot form —
-    distinct union, k smallest, per-slot upd bumped only when the slot
-    receives data — across two batches."""
-    import numpy as np
+    """The shard-keyed KMV kernel: per-slot buffers inside one shard
+    blob must merge/truncate exactly like the per-slot form — distinct
+    union, k smallest, per-slot upd bumped only when the slot receives
+    data — across two batches."""
     import pandas as pd
 
-    from citydata_etl_spark.streaming.stateful import make_kmv_shard_group
+    from citydata_etl_spark.streaming.stateful import _kmv_kernel
 
-    fn = make_kmv_shard_group(k=3)
+    fn = _kmv_kernel(k=3)
     st = _FakeShardState()
 
     def run(rows):
@@ -1300,3 +1152,278 @@ def test_kmv_shard_group_per_slot_buffers():
     out2 = run([(0, 5), (0, 70), (0, 10)])  # 5 displaces 90; 10 dup
     assert sorted(out2[(0, 2)]) == [5, 10, 50]
     assert (300, 2) not in out2  # no data for slot 300: no emission
+
+
+def test_shard_state_rejects_changed_shard_count(monkeypatch):
+    """Restart with another shard count must fail loudly, naming both
+    counts: every key would otherwise be read from (and rewritten to)
+    the wrong shard's blob, silently splitting sessions."""
+    from citydata_etl_spark.streaming import stateful
+
+    state = _FakeShardState()
+    monkeypatch.setattr(stateful, "N_SHARDS", 16)
+    _emitted(stateful._BUFFERED_SESSIONS, state, [(7, 1000, 1, 1800)])
+    monkeypatch.undo()
+    with pytest.raises(ValueError, match=r"16 shards.*N_SHARDS=64"):
+        _emitted(stateful._BUFFERED_SESSIONS, state, [(7, 2000, 2, 1800)])
+
+
+def test_shard_state_rejects_headerless_blob():
+    """A blob in the earlier headerless layout (t12's
+    [n | uid | sid | gc | buflen | buffers], no layout word) must raise,
+    never be misread as the current layout."""
+    import numpy as np
+
+    from citydata_etl_spark.streaming.stateful import _BUFFERED_SESSIONS
+
+    state = _FakeShardState()
+    state.update((np.array([1, 7, 0, 0, 1, 1000, 1, 1800], "<i8").tobytes(),))
+    with pytest.raises(ValueError, match="layout header"):
+        _emitted(_BUFFERED_SESSIONS, state, [(7, 2000, 2, 1800)])
+
+
+def _restart_union(spark, tmp_path, runs, build, mode="append"):
+    """Two availableNow runs of `build(stream)` on ONE checkpoint over an
+    events feed: `runs` holds each run's new parquet parts (pyarrow
+    tables, in arrival order) — the second run sees the first run's
+    files plus its own. Returns every row either run wrote (the union
+    of the sink rows)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from citydata_etl_spark.plans.queries_time import (
+        _await_with_state_partitions,
+    )
+    from citydata_etl_spark.streaming.windows import read_events_stream
+
+    feed = str(tmp_path / "feed")
+    os.makedirs(feed)
+    ckpt = str(tmp_path / "ckpt")
+    rows = []
+    base = 1_700_000_000
+    for r, parts in enumerate(runs):
+        for i, tbl in enumerate(parts):
+            p = os.path.join(feed, f"part-{r}-{i:02d}.parquet")
+            pq.write_table(tbl, p)
+            # the file source orders by modification time
+            os.utime(p, (base + 100 * r + i,) * 2)
+        stream = read_events_stream(spark, feed, max_files_per_trigger=1)
+        _await_with_state_partitions(
+            spark,
+            build(stream).writeStream.outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(lambda df, _id: rows.extend(df.collect())),
+        )
+    return rows
+
+
+def _sentinel(tbl):
+    """One schema-identical far-future event (user_id = -1): advances the
+    watermark past every session horizon, the bounded-feed analog of
+    time passing."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    row = tbl.slice(0, 1).to_pylist()[0]
+    row["ts"] = pc.max(tbl["ts"]).as_py() + datetime.timedelta(days=3650)
+    row["user_id"] = row["event_id"] = -1
+    return pa.Table.from_pylist([row], schema=tbl.schema)
+
+
+def _session_tuples(rows):
+    return sorted(
+        (r["user_id"], r["session_id"], r["n_events"], r["session_start"],
+         r["session_end"])
+        for r in rows if r["user_id"] >= 0
+    )
+
+
+def _batch_twin_sessions(spark):
+    """operators.aggregates.sessionize_dynamic over the oracle events,
+    as sorted (user_id, session_id, n_events, start, end) rows."""
+    from citydata_etl_spark.operators.aggregates import sessionize_dynamic
+    from citydata_etl_spark.sources.readers import read_testdata
+
+    events = read_testdata(spark, SF_ORACLE, "events").select(
+        "user_id", "event_id",
+        F.floor(F.col("ts").cast("double")).cast("long").alias("tsec"),
+        F.when(F.col("event_type") == "error", 300).otherwise(1800)
+        .alias("thr"),
+    )
+    s = sessionize_dynamic(events, "user_id", "tsec", F.col("thr"),
+                           "event_id")
+    return _session_tuples(
+        s.groupBy("user_id", "session_id").agg(
+            F.count("*").alias("n_events"),
+            F.min("tsec").alias("session_start"),
+            F.max("tsec").alias("session_end"),
+        ).collect()
+    )
+
+
+def _oracle_events():
+    import pyarrow.parquet as pq
+
+    return pq.read_table(f"{SF_ORACLE}/events.parquet").sort_by(
+        [("ts", "ascending"), ("event_id", "ascending")]
+    )
+
+
+def test_dynamic_gap_sessions_restart_equals_batch(spark, tmp_path):
+    """t10 across a restart: a time-ordered feed split in two, the
+    second availableNow run resuming from the first run's checkpoint
+    (open sessions live only in the restored shard state) — the union
+    of both runs' sessions must equal the batch twin."""
+    from citydata_etl_spark.streaming.stateful import (
+        streaming_dynamic_gap_sessions,
+    )
+
+    ev = _oracle_events()
+    half = ev.num_rows // 2
+    got = _restart_union(
+        spark, tmp_path,
+        [[ev.slice(0, half)], [ev.slice(half), _sentinel(ev)]],
+        lambda s: streaming_dynamic_gap_sessions(
+            s.select("event_id", "ts", "user_id", "event_type")
+        ),
+    )
+    assert _session_tuples(got) == _batch_twin_sessions(spark)
+
+
+def test_late_sessions_restart_equals_batch(spark, tmp_path):
+    """t12 across a restart: the out-of-order late-block feed, its first
+    half in one availableNow run and the rest (stragglers of the first
+    half included) in a second run on the same checkpoint — buffered
+    events and session counters survive only in the restored state, and
+    the union of both runs' sessions must equal the batch twin."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from citydata_etl_spark.plans.queries_time import (
+        _events_dir_late_blocks,
+    )
+    from citydata_etl_spark.streaming.stateful import (
+        streaming_late_sessions,
+    )
+
+    d, _ = _events_dir_late_blocks(spark, SF_ORACLE)
+    parts = [pq.read_table(p)
+             for p in sorted(glob.glob(os.path.join(d, "part-*.parquet")))]
+    # stragglers arrive one of the feed's 5 time blocks late; the delay
+    # must admit that (the helper's span is the block width only for
+    # nanosecond timestamps)
+    ts = _oracle_events()["ts"]
+    block_s = int((ts[-1].as_py() - ts[0].as_py()).total_seconds()) // 5 + 1
+    half = len(parts) // 2
+    got = _restart_union(
+        spark, tmp_path, [parts[:half], parts[half:]],
+        lambda s: streaming_late_sessions(
+            s.select("event_id", "ts", "user_id", "event_type"),
+            watermark_delay=f"{block_s + 60} seconds",
+        ),
+    )
+    assert _session_tuples(got) == _batch_twin_sessions(spark)
+
+
+def test_attribution_restart_equals_batch(spark, tmp_path):
+    """t18 across a restart: each user's events split at the first
+    purchase whose preceding event is a touch inside the horizon, so
+    that purchase is attributed in the second run from state restored
+    out of the checkpoint. The union of both runs' purchases must equal
+    the a22_attribution batch form."""
+    import collections
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from citydata_etl_spark.plans.queries_agg import a22_attribution
+    from citydata_etl_spark.streaming.stateful import (
+        streaming_last_touch_attribution,
+    )
+
+    H = 3_600_000_000
+    ev = _oracle_events()
+    cut = {}  # user -> first index (in time order) that goes to run 2
+    seen: dict = {}
+    for i, (u, et, ts) in enumerate(zip(
+        ev["user_id"].to_pylist(), ev["event_type"].to_pylist(),
+        ev["ts"].cast("int64").to_pylist(),
+    )):
+        prev = seen.get(u)
+        if (u not in cut and et == "purchase" and prev is not None
+                and prev[0] in ("click", "view") and ts - prev[1] <= H):
+            cut[u] = ts
+        seen[u] = (et, ts)
+    assert cut, "no purchase depends on a touch before the split"
+    far = 2**62
+    in_run2 = pc.greater_equal(
+        ev["ts"].cast("int64"),
+        pa.array([cut.get(u, far) for u in ev["user_id"].to_pylist()]),
+    )
+    got = _restart_union(
+        spark, tmp_path,
+        [[ev.filter(pc.invert(in_run2))], [ev.filter(in_run2)]],
+        lambda s: streaming_last_touch_attribution(s.select(
+            F.col("user_id").cast("long").alias("user_id"),
+            F.col("event_type"),
+            F.unix_micros("ts").alias("tus"),
+            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
+        )),
+    )
+    agg = collections.defaultdict(lambda: [0, 0])
+    for r in got:
+        agg[r["attribution"]][0] += 1
+        agg[r["attribution"]][1] += r["cents"]
+    want = {
+        r["attribution"]: [r["n"], r["revenue_cents"]]
+        for r in a22_attribution(spark, SF_ORACLE).collect()
+    }
+    assert dict(agg) == want
+
+
+def test_slot_kmv_restart_equals_batch(spark, tmp_path):
+    """t19 across a restart: every day-slot receives hashes in both runs
+    (feed split by event_id parity), so each slot's final buffer mixes
+    values restored from the checkpoint with new ones; the latest
+    emission per slot must be the k smallest distinct hashes of the
+    whole feed, with the update sequence continuing across the restart."""
+    import pyarrow.compute as pc
+
+    from citydata_etl_spark.operators.similarity import lcg_pick
+    from citydata_etl_spark.sources.readers import read_testdata
+    from citydata_etl_spark.streaming.stateful import streaming_slot_kmv
+
+    K, SL = 3, 86400
+
+    def slot_hv(df):
+        return df.select(
+            (F.floor(F.unix_timestamp("ts") / SL) * SL)
+            .cast("bigint").alias("slot"),
+            lcg_pick(F.col("user_id")).alias("hv"),
+        )
+
+    ev = _oracle_events()
+    odd = pc.equal(pc.bit_wise_and(ev["event_id"], 1), 1)
+    got = _restart_union(
+        spark, tmp_path, [[ev.filter(odd)], [ev.filter(pc.invert(odd))]],
+        lambda s: streaming_slot_kmv(slot_hv(s), k=K), mode="update",
+    )
+    latest: dict = {}
+    for r in got:
+        upd, hvs = latest.get(r["slot"], (0, []))
+        if r["upd"] > upd:
+            latest[r["slot"]] = (r["upd"], [r["hv"]])
+        elif r["upd"] == upd:
+            hvs.append(r["hv"])
+    want: dict = {}
+    for r in slot_hv(read_testdata(spark, SF_ORACLE, "events")).collect():
+        want.setdefault(r["slot"], set()).add(r["hv"])
+    assert {s: sorted(h) for s, (_, h) in latest.items()} == {
+        s: sorted(h)[:K] for s, h in want.items()
+    }
+    assert max(u for u, _ in latest.values()) == 2  # upd survived
