@@ -45,13 +45,6 @@ def dec_avg(col: Column | str, alias: str) -> Column:
     return (F.sum(cents(col)).cast("double") / 100.0 / F.count(c)).alias(alias)
 
 
-def group_agg(
-    df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]
-) -> DataFrame:
-    """A1 — hash aggregate with automatic partial+final phases."""
-    return df.groupBy(*keys).agg(*aggs)
-
-
 def rollup_agg(
     df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]
 ) -> DataFrame:

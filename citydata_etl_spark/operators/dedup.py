@@ -719,19 +719,6 @@ def _doc_token_id_rows(
     )
 
 
-def _doc_token_ids(
-    docs: DataFrame, text_col: str, id_col: str, shingle_n: int = 1
-) -> DataFrame:
-    """(id, tids ARRAY<BIGINT>) per doc — the array form, for consumers
-    that need the whole id-set in one row (Jaccard verify). Signature
-    kernels (minhash/simhash) aggregate the ROW form instead: collect_list
-    has no map-side combine and ships whole arrays through the exchange,
-    while min/sum aggregates collapse on the map side.
-    """
-    tt = _doc_token_id_rows(docs, text_col, id_col, shingle_n)
-    return tt.groupBy(id_col).agg(F.collect_list("tid").alias("tids"))
-
-
 def minhash_signature_arrays(
     docs: DataFrame, num_hashes: int = 16, shingle_n: int = 2,
     text_col: str = "text", id_col: str = "doc_id",
@@ -769,18 +756,6 @@ def minhash_signature_arrays(
     )
     sigs = F.array(*[F.col(f"__h{i}") for i, _a, _b in params])
     return mins.select(F.col(id_col), sigs.alias("sigs"))
-
-
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = 16, shingle_n: int = 2,
-    text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash signatures in long form (id, i, h) — posexplode of the
-    array-form signatures (kept for tests/oracle symmetry)."""
-    arr = minhash_signature_arrays(docs, num_hashes, shingle_n, text_col, id_col)
-    return arr.select(
-        F.col(id_col), F.posexplode("sigs").alias("i", "h")
-    )
 
 
 def minhash_lsh_pairs(

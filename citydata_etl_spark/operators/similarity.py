@@ -1,11 +1,28 @@
 """Similarity search over embedding columns (SURVEY.md §2.8 D4 [north-star]).
 
-  - brute_force_topk: exact cosine top-k — crossJoin + builtin array math
-    (JVM-side: transform/zip_with/aggregate inside codegen, no Python).
-    The exactness baseline; quadratic, fine for re-ranking a candidate set.
-  - lsh_bucket_topk: random-hyperplane LSH variant — each vector hashed to a
-    sign-bit bucket; candidates only within the same bucket. Linear shuffle
-    cost; recall measured against brute force in tests.
+brute_force_topk is the exact cosine top-k (blocked distributed matmul),
+the baseline every ANN path's recall is measured against. The ANN top-k
+family runs one train -> assign -> probe -> rerank pipeline, each stage
+written once:
+
+  - train: integer-LCG hyperplanes (_int_hyperplanes), LCG seed
+    centroids with optional integer Lloyd rounds (_distexact_centroids),
+    or float k-means (_coarse_centroids);
+  - assign/probe: the integer argmax probe (_int_probe), or the float
+    mapInPandas tag for the Lloyd-trained quantizers; inverted lists
+    optionally capped (_cap_lists);
+  - rerank: exact cosine over candidate pairs (_rerank_pairs), then the
+    (score DESC, neighbor_id) rank window (_top_k).
+
+Five public top-k functions compose those stages: lsh_bucket_topk
+(hyperplane LSH, tables and multi-probe), ivf_topk (float IVF),
+ivf_topk_exact (integer IVF, 0 or more Lloyd rounds, optional list cap),
+pq_topk (float IVF-PQ with ADC arrays) and pq_topk_exactseed (integer
+relational IVF-PQ). Like brute_force_topk, the family assumes unique
+ids: a vector has one row, so one home list, and a query's probes are
+distinct lists, which makes every (query_id, neighbor_id) pair unique
+without a dedup stage (only multi-table LSH, where one pair can share
+a bucket in several tables, deduplicates).
 
 Arithmetic notes: embeddings are float32; products of float32 values are
 EXACT in double (24-bit mantissas), so the dot product differs from any
@@ -171,14 +188,7 @@ def brute_force_topk(
         tile_topk,
         schema="query_id BIGINT, neighbor_id BIGINT, cos_sim DOUBLE",
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        partials.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _top_k(partials, k)
 
 
 def cosine_neardup_pairs(
@@ -248,6 +258,80 @@ def _safe_cos(dot: Column, qn2: Column, cn2: Column,
     return F.round(
         F.when(denom == F.lit(0.0), F.lit(0.0)).otherwise(dot / denom),
         round_digits,
+    )
+
+
+def _vecs(emb: DataFrame, id_col: str, vec_col: str, *extra) -> DataFrame:
+    """(id, v, norm2, *extra): the relation every rerank side reads."""
+    return with_norm2(emb, vec_col).select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "norm2",
+        *extra,
+    )
+
+
+def _side(rel: DataFrame, role: str, *keys) -> DataFrame:
+    """One side of a rerank join over an (id, v, norm2, ...) relation:
+    role 'q' gives (query_id, qv, qn, *keys), 'c' gives (neighbor_id,
+    cv, cn, *keys)."""
+    i, v, n = (
+        ("query_id", "qv", "qn") if role == "q"
+        else ("neighbor_id", "cv", "cn")
+    )
+    return rel.select(
+        F.col("id").alias(i), F.col("v").alias(v), F.col("norm2").alias(n),
+        *keys,
+    )
+
+
+def _rerank_pairs(
+    q: DataFrame, c: DataFrame, on, round_digits: int,
+    score: str = "cos_sim",
+) -> DataFrame:
+    """The exact rerank stage of the ANN family: join the query side to
+    the candidate side (both shaped by _side) on `on`, drop self-pairs,
+    and score each pair's exact double cosine rounded to round_digits
+    (_safe_cos)."""
+    dot = _dot(_as_double(F.col("qv")), _as_double(F.col("cv")))
+    return (
+        q.join(c, on)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn(
+            score, _safe_cos(dot, F.col("qn"), F.col("cn"), round_digits)
+        )
+    )
+
+
+def _top_k(
+    rows: DataFrame, k: int, score: str | Column = "cos_sim",
+    cols: tuple | None = None, part: str = "query_id",
+    tie: str = "neighbor_id", desc: bool = True,
+) -> DataFrame:
+    """The rank stage of every top-k path: keep each `part` group's first
+    k rows ordered by score (DESC, or ASC with desc=False) then `tie` —
+    a total order for unique ids — with rnk their 1-based position.
+    Output columns: cols, by default (part, tie, score, rnk)."""
+    key = F.col(score) if isinstance(score, str) else score
+    w = W.partitionBy(part).orderBy(key.desc() if desc else key, F.col(tie))
+    return (
+        rows.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select(*(cols or (part, tie, score, "rnk")))
+    )
+
+
+def _cap_lists(
+    c: DataFrame, max_list_len: int | None, key: Column
+) -> DataFrame:
+    """Cap every inverted list of a candidate side (neighbor_id, ...,
+    cluster) at its max_list_len members with the smallest (key,
+    neighbor_id): a deterministic uniform subsample, one window keyed by
+    the cluster the lists already partition on. Queries are never
+    capped, so per-query candidates stay <= n_probe * max_list_len at
+    any corpus size. None leaves the lists whole."""
+    if max_list_len is None:
+        return c
+    return _top_k(
+        c, max_list_len, key, tuple(c.columns), part="cluster", desc=False
     )
 
 
@@ -430,102 +514,14 @@ def _corpus_dim(emb: DataFrame, vec_col: str) -> int:
     return len(row[0])
 
 
-def _hyperplanes(spark, n_planes: int, dim: int) -> DataFrame:
-    """Deterministic pseudo-random hyperplanes via an integer LCG:
-    component (p, d) = ((a*(p*dim+d) + c) mod m)/m - 0.5, exact in double.
-    Boundedness: this multiply runs in PYTHON (arbitrary-precision int,
-    no overflow exists) over p*dim+d < n_planes*dim (~512) — not a
-    Spark column, so the lcg_pick mod-m-reduction rule does not apply;
-    the oracle restates the same unreduced product, exact in BIGINT
-    because the index is tiny."""
-    m = 2147483647
-    rows = []
-    for p in range(n_planes):
-        comps = [
-            (((1103515245 * (p * dim + d) + 12345) % m) / m) - 0.5
-            for d in range(dim)
-        ]
-        rows.append((p, comps))
-    return spark.createDataFrame(rows, "plane INT, comps ARRAY<DOUBLE>")
-
-
-def lsh_bucket_topk(
-    emb: DataFrame, k: int = 5, n_planes: int = 8, id_col: str = "vec_id",
-    vec_col: str = "embedding", round_digits: int = 4,
-    n_probe_bits: int = 0,
-) -> DataFrame:
-    """ANN cosine top-k: random-hyperplane sign buckets, exact rerank within
-    bucket. Recall < 1 by construction; tests measure it against brute
-    force. Scale shape: one shuffle on bucket, candidate cost follows
-    bucket occupancy.
-
-    n_probe_bits=1 enables MULTI-PROBE: each query additionally probes the
-    n_planes buckets at hamming distance 1 from its own (the nearest
-    alternative hash codes), trading a (1 + n_planes)x candidate fan-out
-    for recall — the standard knob when raising n_planes makes buckets too
-    sparse. Probed buckets are distinct, so no pair is generated twice.
-    """
-    spark = emb.sparkSession
-    dim = _corpus_dim(emb, vec_col)
-    planes = _hyperplanes(spark, n_planes, dim)
-    base = with_norm2(emb, vec_col).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "norm2"
-    )
-    signed = (
-        base.crossJoin(F.broadcast(planes))
-        .withColumn("proj", _dot(_as_double(F.col("v")), F.col("comps")))
-        .withColumn(
-            "bit",
-            F.when(F.col("proj") > 0, F.expr("shiftleft(1, plane)"))
-            .otherwise(0),
-        )
-        .groupBy("id")
-        .agg(F.sum("bit").alias("bucket"))
-    )
-    bucketed = base.join(signed, "id")
-    q = bucketed.select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("norm2").alias("qn"), "bucket",
-    )
-    if n_probe_bits >= 1:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << p)).cast("bigint")
-                for p in range(n_planes)
-            ],
-        )
-        q = q.withColumn("bucket", F.explode(probes))
-    c = bucketed.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("norm2").alias("cn"), "bucket",
-    )
-    dot = _dot(_as_double(F.col("qv")), _as_double(F.col("cv")))
-    pairs = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos_sim",
-            _safe_cos(dot, F.col("qn"), F.col("cn"), round_digits),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
-
-
 def _int_hyperplanes(spark, n_planes: int, dim: int) -> DataFrame:
-    """Integer-LCG hyperplanes for the oracle-exact sign path: component
-    (p, d) = ((1103515245*(p*dim+d) + 12345) mod 2147483647) -
-    1073741823 — the same LCG stream as _hyperplanes, kept centered in
-    BIGINT instead of scaled into [-0.5, 0.5). Boundedness: Python int
-    math over p*dim+d < n_planes*dim (~512); see _hyperplanes — the
-    lcg_pick reduction rule is for unbounded Spark key columns."""
+    """Integer-LCG hyperplanes: component (p, d) =
+    ((1103515245*(p*dim+d) + 12345) mod 2147483647) - 1073741823, a
+    centered BIGINT. Boundedness: this multiply runs in PYTHON
+    (arbitrary-precision int, no overflow exists) over p*dim+d <
+    n_planes*dim — not a Spark column, so the lcg_pick mod-m-reduction
+    rule does not apply; the oracle restates the same unreduced
+    product, exact in BIGINT because the index is tiny."""
     m = 2147483647
     rows = []
     for p in range(n_planes):
@@ -537,68 +533,58 @@ def _int_hyperplanes(spark, n_planes: int, dim: int) -> DataFrame:
     return spark.createDataFrame(rows, "plane INT, comps ARRAY<BIGINT>")
 
 
-def lsh_bucket_topk_exactsign(
+def lsh_bucket_topk(
     emb: DataFrame, k: int = 5, n_planes: int = 8, id_col: str = "vec_id",
     vec_col: str = "embedding", round_digits: int = 4,
-    n_probe_bits: int = 0,
+    n_probe_bits: int = 0, n_tables: int = 1,
 ) -> DataFrame:
-    """Oracle-exact twin of lsh_bucket_topk (same bucketing topology,
-    same within-bucket rerank): hyperplane signs are computed in EXACT
-    INTEGER arithmetic — embedding components quantized to micros
-    (floor(x*1e6 + 0.5), the engine's cents convention) dotted with
-    integer-LCG plane components in BIGINT — so the bucket assignment
-    is a pure integer function any SQL engine states bit-for-bit. The
-    production path keeps the double projection (one fused multiply-add
-    chain, no quantize pass); this twin exists so the external oracle
-    can verify the full LSH topology end-to-end, where a double-fold
-    sign would be one addition-reorder away from a knife-edge flip.
-    Same scale shape: one broadcast of n_planes rows, one shuffle on
-    bucket, candidate cost follows bucket occupancy."""
-    spark = emb.sparkSession
+    """ANN cosine top-k: random-hyperplane sign buckets, exact rerank
+    within bucket. Recall < 1 by construction; tests measure it against
+    brute force. Scale shape: one broadcast of n_tables*n_planes plane
+    rows, one shuffle on (table, bucket), candidate cost follows bucket
+    occupancy.
+
+    The signs are EXACT INTEGER arithmetic: embedding components
+    quantized to micros (_micros) dotted with the integer-LCG plane
+    components in BIGINT (_idot), so the bucket of every vector is a
+    pure integer function any SQL engine states bit-for-bit, with no
+    addition-order edge where a double projection could flip a sign.
+    Table t's bucket is sum((proj_j > 0) << (j mod n_planes)) over its
+    own planes j = t*n_planes .. t*n_planes + n_planes-1 of one global
+    plane stream, so n_tables=1 is the plain single-table topology.
+
+    Two recall levers:
+      - n_tables > 1 (MULTI-TABLE, Indyk–Motwani's L independent
+        tables; Gionis et al. 1999): a true neighbor only needs to
+        collide in ONE table, so the miss probability decays as
+        (1 - p^P)^L. A pair sharing buckets in several tables is
+        deduplicated after the rerank.
+      - n_probe_bits=1 (MULTI-PROBE): each query also probes the
+        n_planes buckets at hamming distance 1 from its own code,
+        trading a (1 + n_planes)x candidate fan-out for recall. Probed
+        buckets are distinct, so a single table generates no pair
+        twice.
+    """
     dim = _corpus_dim(emb, vec_col)
-    planes = _int_hyperplanes(spark, n_planes, dim)
-    base = with_norm2(emb, vec_col).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "norm2"
-    ).withColumn(
-        "vi",
-        F.transform(
-            _as_double(F.col("v")),
-            lambda x: F.floor(x * 1000000 + 0.5).cast("bigint"),
-        ),
-    )
+    planes = _int_hyperplanes(emb.sparkSession, n_tables * n_planes, dim)
+    base = _int_base(emb, id_col, vec_col)
     signed = (
         base.crossJoin(F.broadcast(planes))
-        .withColumn(
-            "proj",
-            F.aggregate(
-                F.zip_with(
-                    F.col("vi"), F.col("comps"), lambda x, y: x * y
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ),
-        )
+        .withColumn("proj", _idot(F.col("vi"), F.col("comps")))
+        .withColumn("tbl", F.expr(f"plane div {n_planes}"))
         .withColumn(
             "bit",
             F.when(
                 F.col("proj") > 0,
-                F.expr("shiftleft(1, plane)").cast("bigint"),
+                F.expr(f"shiftleft(1, plane % {n_planes})").cast("bigint"),
             ).otherwise(F.lit(0).cast("bigint")),
         )
-        .groupBy("id")
+        .groupBy("id", "tbl")
         .agg(F.sum("bit").alias("bucket"))
     )
     bucketed = base.drop("vi").join(signed, "id")
-    q = bucketed.select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("norm2").alias("qn"), "bucket",
-    )
+    q = _side(bucketed, "q", "tbl", "bucket")
     if n_probe_bits >= 1:
-        # MULTI-PROBE, exactsign form (same lever as lsh_bucket_topk's
-        # n_probe_bits): each query also probes the n_planes buckets at
-        # hamming distance 1 from its own code — integer XOR on the
-        # integer bucket, so the probed topology stays SQL-stateable
-        # (candidates = pairs with bit_count(xor(qb, cb)) <= 1)
         probes = F.array(
             F.col("bucket"),
             *[
@@ -607,124 +593,13 @@ def lsh_bucket_topk_exactsign(
             ],
         )
         q = q.withColumn("bucket", F.explode(probes))
-    c = bucketed.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("norm2").alias("cn"), "bucket",
+    pairs = _rerank_pairs(
+        q, _side(bucketed, "c", "tbl", "bucket"), ["tbl", "bucket"],
+        round_digits,
     )
-    dot = _dot(_as_double(F.col("qv")), _as_double(F.col("cv")))
-    pairs = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos_sim",
-            _safe_cos(dot, F.col("qn"), F.col("cn"), round_digits),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
-
-
-def lsh_multitable_topk_exactsign(
-    emb: DataFrame, k: int = 5, n_tables: int = 8, n_planes: int = 6,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
-    """MULTI-TABLE hyperplane LSH top-k — the standard recall lever for
-    sign-random-projection LSH (Indyk–Motwani's L independent hash
-    tables; Gionis et al. 1999): a true near neighbor only needs to
-    collide in ONE of L tables, so the miss probability decays as
-    (1 - p^P)^L instead of the single-table 1 - p^P. Fewer planes per
-    table (P) raises per-table collision probability; more tables (L)
-    multiplies coverage; candidate cost is bounded by the union of L
-    bucket occupancies, deduplicated BEFORE any cosine is computed.
-
-    Oracle-exact like lsh_bucket_topk_exactsign: all L*P hyperplanes
-    come from the SAME centered integer-LCG stream (global plane index
-    j = t*P + p, component (j, d) = LCG(j*dim + d)), embeddings
-    quantized to micros, signs in BIGINT — table t's bucket is
-    sum((proj_j > 0) << (j mod P)) over its own P planes, a pure
-    integer function any SQL engine restates bit-for-bit.
-
-    Scale shape: one broadcast of L*P plane rows, one shuffle keyed by
-    (table, bucket) — L times the single-table candidate stage, the
-    disclosed price of the recall — then one distinct on (query,
-    neighbor) so the exact rerank never scores a pair twice."""
-    spark = emb.sparkSession
-    dim = _corpus_dim(emb, vec_col)
-    planes = _int_hyperplanes(spark, n_tables * n_planes, dim)
-    base = with_norm2(emb, vec_col).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "norm2"
-    ).withColumn(
-        "vi",
-        F.transform(
-            _as_double(F.col("v")),
-            lambda x: F.floor(x * 1000000 + 0.5).cast("bigint"),
-        ),
-    )
-    signed = (
-        base.crossJoin(F.broadcast(planes))
-        .withColumn(
-            "proj",
-            F.aggregate(
-                F.zip_with(
-                    F.col("vi"), F.col("comps"), lambda x, y: x * y
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ),
-        )
-        .withColumn("tbl", (F.col("plane") / n_planes).cast("int"))
-        .withColumn(
-            "bit",
-            F.when(
-                F.col("proj") > 0,
-                F.expr(f"shiftleft(1, plane % {n_planes})")
-                .cast("bigint"),
-            ).otherwise(F.lit(0).cast("bigint")),
-        )
-        .groupBy("id", "tbl")
-        .agg(F.sum("bit").alias("bucket"))
-    )
-    vecs = scoped_persist(base.drop("vi"))
-    q = signed.select(
-        F.col("id").alias("query_id"), "tbl", "bucket"
-    )
-    c = signed.select(
-        F.col("id").alias("neighbor_id"), "tbl", "bucket"
-    )
-    cand = (
-        q.join(c, ["tbl", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    qv = vecs.select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("norm2").alias("qn"),
-    )
-    cv = vecs.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("norm2").alias("cn"),
-    )
-    dot = _dot(_as_double(F.col("qv")), _as_double(F.col("cv")))
-    pairs = cand.join(qv, "query_id").join(cv, "neighbor_id").withColumn(
-        "cos_sim",
-        _safe_cos(dot, F.col("qn"), F.col("cn"), round_digits),
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    if n_tables > 1:
+        pairs = pairs.dropDuplicates(["query_id", "neighbor_id"])
+    return _top_k(pairs, k)
 
 
 #: Measured n_probe escalation factor for the capped-occupancy IVF
@@ -868,50 +743,12 @@ def ivf_topk(
         schema=f"{id_col} BIGINT, {vec_col} ARRAY<FLOAT>, "
         "cluster INT, probes ARRAY<INT>",
     )
-    base = with_norm2(tagged, vec_col)
-    q = base.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.col("norm2").alias("qn"), F.explode("probes").alias("cluster"),
+    base = _vecs(tagged, id_col, vec_col, "cluster", "probes")
+    q = _side(base, "q", F.explode("probes").alias("cluster"))
+    c = _cap_lists(
+        _side(base, "c", "cluster"), max_list_len, F.xxhash64("neighbor_id")
     )
-    c = base.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        F.col("norm2").alias("cn"), "cluster",
-    )
-    if max_list_len is not None:
-        # cap every inverted list at max_list_len members kept by
-        # smallest xxhash64(id) — a deterministic uniform subsample
-        # (one window keyed by the cluster, the partitioning the lists
-        # already live in); queries are NOT capped, only the candidate
-        # side, so every query still gets n_probe * max_list_len
-        # candidates
-        lw = W.partitionBy("cluster").orderBy(
-            F.xxhash64("neighbor_id"), F.col("neighbor_id")
-        )
-        c = (
-            c.withColumn("__lr", F.row_number().over(lw))
-            .filter(F.col("__lr") <= max_list_len)
-            .drop("__lr")
-        )
-    dot = _dot(_as_double(F.col("qv")), _as_double(F.col("cv")))
-    pairs = (
-        q.join(c, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos_sim",
-            _safe_cos(dot, F.col("qn"), F.col("cn"), round_digits),
-        )
-        # a candidate reachable through several probed clusters appears
-        # once per cluster — dedupe BEFORE ranking or rnk counts ghosts
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _top_k(_rerank_pairs(q, c, "cluster", round_digits), k)
 
 
 def _micros(col: Column) -> Column:
@@ -953,7 +790,7 @@ def _lcg_seed_rows(
     """The n corpus vectors with the smallest
     ((1103515245 * (id mod 2147483647) + 12345) mod 2147483647, id),
     indexed 0..n-1 and micros-quantized — the deterministic
-    SQL-stateable seed pick shared by the oracle-exact ANN twins.
+    SQL-stateable seed pick shared by the integer ANN paths.
     The overflow-proof reduced form lives in lcg_pick (one
     definition). TakeOrderedAndProject (bounded per-partition heap);
     the row_number window runs over the already-limited n rows."""
@@ -972,188 +809,97 @@ def _lcg_seed_rows(
     )
 
 
-def ivf_topk_exactseed(
-    emb: DataFrame, k: int = 5, n_centroids: int = 16, n_probe: int = 4,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    round_digits: int = 4, max_list_len: int | None = None,
-) -> DataFrame:
-    """Oracle-exact twin of ivf_topk (the d4_ann_lsh_rank playbook
-    applied to IVF): the SAME assign -> probe -> pruned-join -> exact
-    rerank topology, but every step that decides WHICH list a vector
-    lands in is pure integer arithmetic, so the whole pipeline is
-    SQL-stateable bit-for-bit and the external oracle verifies the IVF
-    structure itself, not just its recall.
-
-      1. SEEDS: the n_centroids corpus vectors with the smallest
-         ((1103515245*(id mod m) + 12345) mod m, id) — the engine's
-         integer-LCG stream as a deterministic uniform draw (the
-         production trainer's xxhash64 sample ordering restated in a
-         form any SQL engine evaluates identically). Seeds ARE the
-         centroids: no Lloyd iterations, whose double means/argmax
-         would sit one addition-reorder ulp from an assignment flip
-         (the float Lloyd trainer stays rows-only + recall-tested in
-         d4_ann_ivf / d4_ann_ivf_dist; its integer restatement with a
-         real training iteration is ivf_topk_distexact).
-      2. ASSIGN + PROBE: both the corpus vector and the seed centroid
-         are quantized to integer micros; the assignment score is their
-         exact BIGINT dot (embeddings are unit-normalized, so dot-argmax
-         is cosine-argmax up to quantization; |x|<=1 and dim<=64 keeps
-         every product-sum far inside int64). cluster = argmax
-         centroid (ties to the smaller centroid index); probes = the
-         n_probe best. One broadcast of n_centroids rows, one bounded
-         x n_centroids fan-out, one tiny per-vector window.
-      3. RERANK: exact double cosine within the probed lists, rounded
-         to round_digits, row_number with a total-order tie-break.
-
-    Scale shape is identical to ivf_topk: the seed pick is a
-    TakeOrderedAndProject (bounded per-partition heap, n_centroids rows
-    to the driver — a parameter-bounded model, never the corpus), the
-    probe join is an equi-join on cluster that scans only
-    n_probe/n_centroids of the corpus.
-
-    `max_list_len` (r16, the capped PRODUCTION posture made
-    oracle-exact): caps every inverted list at that many members,
-    kept by smallest (lcg_pick(id), id) — ivf_topk's smallest-
-    xxhash64 uniform-subsample rule restated in the engine's integer
-    LCG so the truncated candidate SET is SQL-stateable bit-for-bit.
-    Same bound as production: per-query candidates <=
-    n_probe * max_list_len regardless of corpus size (the lever the
-    r14 scale rehearsal's ~n^1.5 probe-shuffle ramp requires);
-    queries are never capped, only the candidate side.
-    """
-    seeds = _lcg_seed_rows(emb, n_centroids, id_col, vec_col)
-    base = _int_base(emb, id_col, vec_col)
-    return _int_probe_rerank(
-        base, seeds, k, n_probe, round_digits, max_list_len
-    )
-
-
 def _int_base(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(id, v, norm2, vi) — the raw vector plus its integer-micros
-    quantization, the input contract of _int_probe_rerank."""
-    return with_norm2(emb, vec_col).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "norm2"
-    ).withColumn("vi", _micros(F.col("v")))
+    quantization, the input of the integer sign and probe stages."""
+    return _vecs(emb, id_col, vec_col).withColumn("vi", _micros(F.col("v")))
 
 
-def _int_probe_rerank(
-    base: DataFrame, cents: DataFrame, k: int, n_probe: int,
-    round_digits: int, max_list_len: int | None = None,
+def _int_probe(
+    base: DataFrame, cents: DataFrame, n_probe: int, key: str = "id"
 ) -> DataFrame:
-    """The shared integer assign -> probe -> pruned-join -> exact-rerank
-    tail of the oracle-exact IVF twins: `cents` is any small
-    (cidx, ci: ARRAY<BIGINT>) centroid table (LCG seeds for
-    ivf_topk_exactseed, the trained table for ivf_topk_distexact);
-    assignment/probes are exact BIGINT dot argmax with ties to the
-    smaller cidx, rerank is exact double cosine within probed lists.
-    `max_list_len` truncates each inverted list to its members with
-    the smallest (lcg_pick(id), id) — production ivf_topk's
-    deterministic uniform-subsample cap in SQL-stateable integer form
-    (one window keyed by the cluster the lists already partition on;
-    only the CANDIDATE side is capped, queries always probe)."""
-    pw = W.partitionBy("id").orderBy(F.col("idot").desc(), F.col("cidx"))
-    # both join sides (queries = all probes, candidates = prnk 1) read
-    # pr — persist so the broadcast-fan-out + assignment window runs once
-    pr = scoped_persist(
+    """The integer assign/probe stage: every `base` row (micros `vi`)
+    against every row of the small (cidx, ci: ARRAY<BIGINT>) centroid
+    table (one broadcast fan-out), scored by the exact BIGINT dot idot.
+    Keeps each vector's n_probe best centroids as prnk 1..n_probe, ties
+    to the smaller cidx (one per-`key` window); prnk 1 is the vector's
+    home list. Embeddings are unit-normalized, so dot-argmax is
+    cosine-argmax up to quantization, and |x|<=1 with dim<=64 keeps
+    every product-sum far inside int64."""
+    pw = W.partitionBy(key).orderBy(F.col("idot").desc(), F.col("cidx"))
+    return (
         base.crossJoin(F.broadcast(cents))
         .withColumn("idot", _idot(F.col("vi"), F.col("ci")))
         .withColumn("prnk", F.row_number().over(pw))
         .filter(F.col("prnk") <= n_probe)
-        .select("id", "v", "norm2", "cidx", "prnk")
-    )
-    q = pr.select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("norm2").alias("qn"), F.col("cidx").alias("cluster"),
-    )
-    c = pr.filter(F.col("prnk") == 1).select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("norm2").alias("cn"), F.col("cidx").alias("cluster"),
-    )
-    if max_list_len is not None:
-        lw = W.partitionBy("cluster").orderBy(
-            lcg_pick(F.col("neighbor_id")), F.col("neighbor_id")
-        )
-        c = (
-            c.withColumn("__lr", F.row_number().over(lw))
-            .filter(F.col("__lr") <= max_list_len)
-            .drop("__lr")
-        )
-    dot = _dot(_as_double(F.col("qv")), _as_double(F.col("cv")))
-    # each candidate belongs to exactly ONE list and a query's probes
-    # are distinct lists, so (query, neighbor) pairs are already unique
-    # — no dedup stage needed (unlike multi-probe LSH).
-    pairs = (
-        q.join(c, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos_sim",
-            _safe_cos(dot, F.col("qn"), F.col("cn"), round_digits),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
     )
 
 
-def ivf_topk_distexact(
+def ivf_topk_exact(
     emb: DataFrame, k: int = 5, n_centroids: int = 16, n_probe: int = 4,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    round_digits: int = 4, n_iter: int = 2,
+    round_digits: int = 4, n_iter: int = 0,
+    max_list_len: int | None = None,
 ) -> DataFrame:
-    """Oracle-exact twin of the DISTRIBUTED IVF trainer
-    (d4_ann_ivf_dist / _kmeans_distributed): n_iter CHAINED full-corpus
-    Lloyd iterations restated in pure integer arithmetic so even the
-    TRAINING LOOP — not just assignment and rerank — is SQL-stateable
-    bit-for-bit (iteration k's assignment reads iteration k-1's trained
-    centroids, the g1/g3/BPE unrolled-iteration playbook).
+    """Oracle-exact IVF top-k: the assign -> probe -> pruned-join ->
+    exact-rerank topology of ivf_topk, but every step that decides WHICH
+    list a vector lands in is pure integer arithmetic, so the whole
+    pipeline is SQL-stateable bit-for-bit and the external oracle
+    verifies the IVF structure itself, not just its recall.
 
-      1. INIT: the same LCG seed pick as ivf_topk_exactseed
-         (n_centroids corpus vectors, integer micros).
-      2. Per iteration, ASSIGN pass: every corpus vector joins its
-         argmax-BIGINT-dot centroid (ties to the smaller index) — one
-         broadcast fan-out, one per-vector window, exactly
-         _kmeans_distributed's assignment.
-      3. Per iteration, UPDATE pass: new centroid component c[d] =
-         floor-mean of the members' micros — posexplode +
-         groupBy(cluster, d) SUM/COUNT. The map-side partial
-         aggregation IS the tree-aggregated partial-sum topology of
-         _kmeans_distributed's mapInPandas kernel, but here the model
-         never touches the driver at all: the trained table stays a
-         DataFrame and is broadcast into the next iteration (and
-         finally the probe join). Integer sums are associative, so the
-         result is independent of partitioning (the property the float
-         trainer can never have — its += order shifts with the
-         partition map); the floored mean is stated as
-         (s - pmod(s, n)) div n, which any SQL engine evaluates
-         identically for negative sums. Clusters that attract no
-         members carry the previous iteration's centroid. Deliberate,
-         documented deviation from the float trainer: no per-iteration
-         re-normalization (sqrt is not integer-stateable), so the twin
-         states Lloyd-on-dot rather than spherical Lloyd — the
-         structural machinery (assign/update/carry/probe) is identical.
-      4. PROBE + RERANK: the shared _int_probe_rerank tail against the
-         final trained centroids.
+      1. TRAIN (_distexact_centroids): the n_centroids corpus vectors
+         with the smallest ((1103515245*(id mod m) + 12345) mod m, id) —
+         the engine's integer-LCG stream as a deterministic uniform draw
+         (the float trainer's xxhash64 sample ordering restated in a
+         form any SQL engine evaluates identically), micros-quantized.
+         n_iter=0 uses these seeds as the centroids; n_iter > 0 runs
+         that many CHAINED full-corpus integer Lloyd rounds — the
+         integer restatement of the DISTRIBUTED trainer
+         (_kmeans_distributed), so even the training loop is
+         SQL-stateable. A double Lloyd mean/argmax would sit one
+         addition-reorder ulp from an assignment flip.
+      2. ASSIGN + PROBE (_int_probe): cluster = argmax BIGINT dot of
+         the micros vector and centroid (ties to the smaller centroid
+         index); probes = the n_probe best. One broadcast of
+         n_centroids rows, one bounded x n_centroids fan-out, one tiny
+         per-vector window, persisted because both join sides read it.
+      3. RERANK (_rerank_pairs, _top_k): exact double cosine within the
+         probed lists, rounded to round_digits, row_number with a
+         total-order tie-break.
 
-    Scale shape: n_iter+1 corpus passes (one assign per iteration +
-    probe) over the persisted base relation, each iteration one
-    posexploded shuffle of corpus x dim rows with map-side combine —
-    the same per-iteration cost profile as _kmeans_distributed, with
-    zero driver collects anywhere in the plan. Integer budget: with
-    unit-normalized inputs |micros| <= ~1e6, so a per-(cluster, dim)
-    member sum stays inside int64 up to ~9e12 members per cluster
-    (far beyond a 100 TB corpus), and Spark 4's ANSI sum raises rather
-    than wraps if that budget is ever exceeded.
+    `max_list_len` (the capped PRODUCTION posture made oracle-exact):
+    caps every inverted list at that many members, kept by smallest
+    (lcg_pick(id), id) — ivf_topk's smallest-xxhash64 uniform-subsample
+    rule restated in the engine's integer LCG, so the truncated
+    candidate SET is SQL-stateable. Per-query candidates stay <=
+    n_probe * max_list_len regardless of corpus size (the lever the r14
+    scale rehearsal's ~n^1.5 probe-shuffle ramp requires).
+
+    Scale shape is ivf_topk's: the seed pick is a TakeOrderedAndProject
+    (n_centroids rows to the driver, never the corpus), the probe join
+    is an equi-join on cluster scanning only n_probe/n_centroids of the
+    corpus; each Lloyd round adds one corpus pass and one posexploded
+    shuffle with map-side combine, with zero driver collects.
     """
-    base = scoped_persist(_int_base(emb, id_col, vec_col))
+    base = _int_base(emb, id_col, vec_col)
+    if n_iter > 0:
+        # the Lloyd rounds and the probe both read base
+        base = scoped_persist(base)
     cents = _distexact_centroids(
         base, emb, n_centroids, id_col, vec_col, n_iter
     )
-    return _int_probe_rerank(base, cents, k, n_probe, round_digits)
+    pr = scoped_persist(
+        _int_probe(base, cents, n_probe)
+        .select("id", "v", "norm2", "cidx", "prnk")
+    )
+    q = _side(pr, "q", F.col("cidx").alias("cluster"))
+    c = _cap_lists(
+        _side(
+            pr.filter(F.col("prnk") == 1), "c", F.col("cidx").alias("cluster")
+        ),
+        max_list_len, lcg_pick(F.col("neighbor_id")),
+    )
+    return _top_k(_rerank_pairs(q, c, "cluster", round_digits), k)
 
 
 def distexact_centroids(
@@ -1161,7 +907,7 @@ def distexact_centroids(
     id_col: str = "vec_id", vec_col: str = "embedding", n_iter: int = 2,
 ) -> DataFrame:
     """The trained (cidx, ci: ARRAY<BIGINT>) centroid table of
-    ivf_topk_distexact's integer Lloyd loop, exposed for direct
+    ivf_topk_exact's integer Lloyd loop, exposed for direct
     property-testing of the training step (pure integers — no float
     anywhere, so a Python reference model can assert bit-equality on
     arbitrary corpora)."""
@@ -1175,22 +921,30 @@ def _distexact_centroids(
     base: DataFrame, emb: DataFrame, n_centroids: int,
     id_col: str, vec_col: str, n_iter: int,
 ) -> DataFrame:
-    """n_iter CHAINED integer Lloyd iterations, unrolled into one plan
-    (the g1_host_pagerank playbook): each round re-assigns the corpus
-    to its argmax-BIGINT-dot centroid and replaces every non-empty
-    cluster's centroid with the floored integer mean of its members;
-    empty clusters carry the PREVIOUS round's centroid. Iteration k's
+    """LCG seed centroids (_lcg_seed_rows) followed by n_iter CHAINED
+    integer Lloyd iterations, unrolled into one plan (the
+    g1_host_pagerank playbook). Each round re-assigns the corpus to its
+    argmax-BIGINT-dot centroid and replaces every non-empty cluster's
+    centroid with the floored integer mean of its members' micros —
+    posexplode + groupBy(cluster, d) SUM/COUNT, whose map-side partial
+    aggregation is the tree-aggregated partial-sum topology of
+    _kmeans_distributed, but the model never touches the driver: the
+    trained table stays a DataFrame broadcast into the next round.
+    Integer sums are associative, so the result is independent of
+    partitioning; the floored mean is (s - pmod(s, n)) div n, which
+    any SQL engine evaluates identically for negative sums. Empty
+    clusters carry the PREVIOUS round's centroid. Iteration k's
     assignment reads iteration k-1's trained table, so the oracle must
-    state the whole chain, not one step."""
+    state the whole chain, not one step. Deliberate deviation from the
+    float trainer: no per-round re-normalization (sqrt is not
+    integer-stateable), so this is Lloyd-on-dot rather than spherical
+    Lloyd. Integer budget: |micros| <= ~1e6, so a per-(cluster, dim)
+    member sum stays inside int64 up to ~9e12 members per cluster, and
+    Spark's ANSI sum raises rather than wraps past it."""
     cents = _lcg_seed_rows(emb, n_centroids, id_col, vec_col)
-    w0 = W.partitionBy("id").orderBy(F.col("idot").desc(), F.col("cidx"))
     for _ in range(n_iter):
-        members = (
-            base.crossJoin(F.broadcast(cents))
-            .withColumn("idot", _idot(F.col("vi"), F.col("ci")))
-            .withColumn("rn", F.row_number().over(w0))
-            .filter(F.col("rn") == 1)
-            .select(F.col("cidx").alias("cluster"), "vi")
+        members = _int_probe(base, cents, 1).select(
+            F.col("cidx").alias("cluster"), "vi"
         )
         sums = (
             members.select("cluster", F.posexplode("vi").alias("d", "x"))
@@ -1244,7 +998,7 @@ def pq_topk_exactseed(
         coarse centroid c, and seed c's j-th subvector is subspace j's
         codeword c (n_centroids == ks == number of seeds);
       - coarse assignment/probing: exact BIGINT micros dot, as
-        ivf_topk_exactseed;
+        ivf_topk_exact;
       - PQ encode: per (vector, subspace), the codeword with the
         smallest exact integer squared-L2 distance (ties to the
         smaller code);
@@ -1275,15 +1029,10 @@ def pq_topk_exactseed(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     ).withColumn("vi", _micros(F.col("v"))).drop("v")
 
-    # coarse probe (identical rule to ivf_topk_exactseed); persisted:
-    # the query and candidate join sides both read it
-    pw = W.partitionBy("id").orderBy(F.col("idot").desc(), F.col("cidx"))
+    # coarse probe (ivf_topk_exact's rule); persisted: the query and
+    # candidate join sides both read it
     pr = scoped_persist(
-        base.crossJoin(F.broadcast(seeds))
-        .withColumn("idot", _idot(F.col("vi"), F.col("ci")))
-        .withColumn("prnk", F.row_number().over(pw))
-        .filter(F.col("prnk") <= n_probe)
-        .select("id", "cidx", "prnk")
+        _int_probe(base, seeds, n_probe).select("id", "cidx", "prnk")
     )
 
     # (id, subspace j, code, exact integer squared-L2 to the codeword):
@@ -1350,11 +1099,8 @@ def pq_topk_exactseed(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
     )
-    w = W.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
-    return (
-        adc.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "adc_d2", "rnk")
+    return _top_k(adc, k, "adc_d2", desc=False).withColumn(
+        "rnk", F.col("rnk").cast("bigint")
     )
 
 
@@ -1495,48 +1241,18 @@ def pq_topk(
         q.join(c, "cluster")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("approx_sim", F.round(score, round_digits))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("neighbor_id")
     )
     if rerank_factor <= 0:
-        return (
-            pairs.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "approx_sim", "rnk")
-        )
-    shortlist = (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
+        return _top_k(pairs, k, "approx_sim")
+    shortlist = _top_k(
+        pairs, k * rerank_factor, "approx_sim", ("query_id", "neighbor_id")
     )
-    base = with_norm2(emb, vec_col)
-    qv = base.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.col("norm2").alias("qn"),
+    vecs = _vecs(emb, id_col, vec_col)
+    exact = _rerank_pairs(
+        _side(vecs, "q").join(shortlist, "query_id"), _side(vecs, "c"),
+        "neighbor_id", round_digits, "approx_sim",
     )
-    cv = base.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        F.col("norm2").alias("cn"),
-    )
-    dot = _dot(_as_double(F.col("qv")), _as_double(F.col("cv")))
-    exact = (
-        shortlist.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "approx_sim",
-            _safe_cos(dot, F.col("qn"), F.col("cn"), round_digits),
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "approx_sim", "rnk")
-    )
+    return _top_k(exact, k, "approx_sim")
 
 
 def label_centroids(
@@ -2100,8 +1816,6 @@ def mmr_batch(
     groups. Output: (query_id, rnk 1..k, neighbor_id, rel_dot, mmr2),
     mmr2 of pick 1 = rel_dot by the twin's convention.
     """
-    import pandas as pd
-
     base = emb.select(
         F.col(id_col).alias("nid"), _micros(F.col(vec_col)).alias("vi")
     )
@@ -2112,25 +1826,19 @@ def mmr_batch(
     pairs = (
         base.join(F.broadcast(qv), F.col("nid") != F.col("qid"))
         .withColumn("rel", _idot(F.col("vi"), F.col("qi")))
-        .select("qid", "nid", "vi", "rel")
     )
-    rw = W.partitionBy("qid").orderBy(F.col("rel").desc(), "nid")
-    cand = (
-        pairs.withColumn("crnk", F.row_number().over(rw))
-        .filter(F.col("crnk") <= n_cand)
-        .select("qid", "nid", "vi", "rel")
-    )
-    return _mmr_pick(cand, k)
+    return _mmr_pick(pairs, k, n_cand)
 
 
-def _mmr_pick(cand: DataFrame, k: int) -> DataFrame:
-    """The shared greedy-MMR group kernel over a candidate table
-    (qid, nid, vi: ARRAY<BIGINT> micros, rel: BIGINT) — one
-    applyInPandas group per query, state bounded by n_cand*dim int64s,
-    identical integer arithmetic and tie-breaks to the unrolled twin
-    (mmr_topk_exactseed). Shared by the exact-candidate mmr_batch and
-    the IVF-probed mmr_batch_ann, so the candidate SOURCE is the only
-    thing that differs between them."""
+def _mmr_pick(pairs: DataFrame, k: int, n_cand: int) -> DataFrame:
+    """The shared greedy-MMR group kernel over a candidate-pair table
+    (qid, nid, vi: ARRAY<BIGINT> micros, rel: BIGINT): each query's
+    candidates are cut to its top-n_cand by (rel DESC, nid) (_top_k),
+    then one applyInPandas group per query runs the greedy picks —
+    state bounded by n_cand*dim int64s, identical integer arithmetic
+    and tie-breaks to the unrolled twin (mmr_topk_exactseed). Shared by
+    the exact-candidate mmr_batch and the IVF-probed mmr_batch_ann, so
+    the candidate SOURCE is the only thing that differs between them."""
     import pandas as pd
 
     out_schema = (
@@ -2177,6 +1885,10 @@ def _mmr_pick(cand: DataFrame, k: int) -> DataFrame:
             columns=["query_id", "rnk", "neighbor_id", "rel_dot", "mmr2"],
         )
 
+    cand = _top_k(
+        pairs, n_cand, "rel", ("qid", "nid", "vi", "rel"), part="qid",
+        tie="nid",
+    )
     return cand.groupBy("qid").applyInPandas(pick, out_schema)
 
 
@@ -2187,8 +1899,8 @@ def mmr_batch_ann(
     query_col: str = "query_id",
 ) -> DataFrame:
     """MMR diversification composed OVER an ANN probe — the 100 TB
-    shape mmr_batch's doc promises: candidate generation is the
-    oracle-exact IVF twin's assign -> probe topology (LCG seed
+    shape mmr_batch's doc promises: candidate generation is
+    ivf_topk_exact's assign -> probe topology (LCG seed
     centroids, integer-micros dot assignment with ties to the smaller
     centroid index) instead of an exact (query x corpus) rel pass, and
     the greedy selection is the SAME _mmr_pick group kernel, so the
@@ -2202,7 +1914,7 @@ def mmr_batch_ann(
     cut), so the composition stays DRIVER-ORACLED bit-for-bit.
 
     Scale shape: one broadcast of n_centroids rows against the corpus
-    (the twin's assignment pass), a probe equi-join on cluster that
+    (ivf_topk_exact's assignment pass), a probe equi-join on cluster that
     scans only ~n_probe/n_centroids of the corpus per query, the
     per-query top-n_cand window, then the bounded group kernel.
     Same contract as mmr_batch: query ids must be existing corpus ids
@@ -2213,18 +1925,13 @@ def mmr_batch_ann(
             F.col(id_col).alias("nid"), _micros(F.col(vec_col)).alias("vi")
         )
     )
-    pw = W.partitionBy("nid").orderBy(F.col("idot").desc(), F.col("cidx"))
     # persist the probe table NARROW — (nid, cidx, prnk) only: carrying
     # the vector through all n_probe rows would cache ~n_probe copies
     # of the corpus; vectors re-join from the single persisted `base`
     # where actually consumed (the prnk==1 assign rows and the handful
     # of query rows)
     pr = scoped_persist(
-        base.crossJoin(F.broadcast(seeds.select("cidx", "ci")))
-        .withColumn("idot", _idot(F.col("vi"), F.col("ci")))
-        .withColumn("prnk", F.row_number().over(pw))
-        .filter(F.col("prnk") <= n_probe)
-        .select("nid", "cidx", "prnk")
+        _int_probe(base, seeds, n_probe, "nid").select("nid", "cidx", "prnk")
     )
     assign = pr.filter(F.col("prnk") == 1).select("nid", "cidx").join(
         base, "nid"
@@ -2235,47 +1942,12 @@ def mmr_batch_ann(
         .join(base, "nid")
         .select("qid", F.col("vi").alias("qi"), "cidx")
     )
-    cand0 = (
+    pairs = (
         assign.join(F.broadcast(probes), "cidx")
         .filter(F.col("nid") != F.col("qid"))
         .withColumn("rel", _idot(F.col("vi"), F.col("qi")))
-        .select("qid", "nid", "vi", "rel")
     )
-    rw = W.partitionBy("qid").orderBy(F.col("rel").desc(), "nid")
-    cand = (
-        cand0.withColumn("crnk", F.row_number().over(rw))
-        .filter(F.col("crnk") <= n_cand)
-        .select("qid", "nid", "vi", "rel")
-    )
-    return _mmr_pick(cand, k)
-
-
-def ann_recall_at_k(
-    emb: DataFrame, k: int = 5, n_planes: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-query RECALL@k of the LSH path against exact cosine top-k,
-    as integers a SQL oracle states in closed form — the measurement
-    every ANN deployment publishes, made driver-checkable.
-
-    ANN side: lsh_bucket_topk_exactsign — the SAME bucket topology as
-    the production lsh_bucket_topk (sign agreement is test-pinned),
-    with integer-sign bucketing so the oracle can restate it
-    bit-for-bit. Exact side: brute_force_topk (blocked distributed
-    matmul, same rounded-cosine total order). Output one row per
-    query: n_exact (top-k size, = k when the corpus has > k others),
-    n_ann (LSH picks — 0 for a singleton-bucket query), n_hit
-    (|ANN ∩ exact|). recall@k = n_hit / n_exact, left as integers so
-    the hash is exact; the doc states the ratio.
-
-    Scale shape: the two sides are the operators' own plans (bucket
-    shuffle; blocked matmul) plus one (query, neighbor) equi-join and
-    one groupBy query — both shuffles on query_id, no new corpus-sized
-    state."""
-    ann = lsh_bucket_topk_exactsign(
-        emb, k=k, n_planes=n_planes, id_col=id_col, vec_col=vec_col
-    ).select("query_id", "neighbor_id")
-    return recall_vs_exact(emb, ann, k=k, id_col=id_col, vec_col=vec_col)
+    return _mmr_pick(pairs, k, n_cand)
 
 
 def recall_vs_exact(
@@ -2283,10 +1955,9 @@ def recall_vs_exact(
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Shared recall@k counter against exact cosine top-k for ANY ANN
-    picks table (query_id, neighbor_id) — the tail of ann_recall_at_k,
-    factored so every ANN family (LSH, IVF, PQ) gets the same
-    driver-checkable measurement. Output per query: n_exact, n_ann,
-    n_hit (all BIGINT); recall@k = n_hit / n_exact."""
+    picks table (query_id, neighbor_id), so every ANN family (LSH, IVF,
+    PQ) gets the same driver-checkable measurement. Output per query:
+    n_exact, n_ann, n_hit (all BIGINT); recall@k = n_hit / n_exact."""
     exact = brute_force_topk(
         emb, k=k, id_col=id_col, vec_col=vec_col
     ).select("query_id", "neighbor_id")

@@ -129,19 +129,19 @@ LAST_DRIVER_CHECK: dict[str, int] = {
     "a7_union_by_name": 13,
     "a8_city_score": 13,
     "a9_pivot": 13,
-    "d4_ann_ivf": 17,  # r17 rows-only driver row (2500 rows) after the self-acting ivf_posture_for change; rows-only by construction
-    "d4_ann_ivf_capped_rank": 16,  # NEW r16: oracle-exact capped-IVF twin (VERDICT task 1)
-    "d4_ann_ivf_dist": 14,  # rows-only by construction (r4 row)
-    "d4_ann_ivf_dist_rank": 13,
-    "d4_ann_ivf_rank": 13,
-    "d4_ann_ivf_recall": 15,
-    "d4_ann_lsh": 13,
-    "d4_ann_lsh_rank": 17,
-    "d4_ann_multiprobe_recall": 16,
-    "d4_ann_multitable_recall": 16,
-    "d4_ann_pq": 13,
-    "d4_ann_pq_rank": 13,
-    "d4_ann_recall": 15,
+    "d4_ann_ivf": 0,
+    "d4_ann_ivf_capped_rank": 0,
+    "d4_ann_ivf_dist": 0,
+    "d4_ann_ivf_dist_rank": 0,
+    "d4_ann_ivf_rank": 0,
+    "d4_ann_ivf_recall": 0,
+    "d4_ann_lsh": 0,
+    "d4_ann_lsh_rank": 0,
+    "d4_ann_multiprobe_recall": 0,
+    "d4_ann_multitable_recall": 0,
+    "d4_ann_pq": 0,
+    "d4_ann_pq_rank": 0,
+    "d4_ann_recall": 0,
     "d4_bigram_logprob": 13,
     "d4_bm25_topk": 16,
     "d4_bpe_encode": 15,
@@ -172,8 +172,8 @@ LAST_DRIVER_CHECK: dict[str, int] = {
     "d4_lsh_pair_recall": 15,
     "d4_minhash_hash": 14,  # rows-only by construction (r4 row)
     "d4_minhash_lsh": 13,
-    "d4_mmr_ann": 15,
-    "d4_mmr_batch": 14,
+    "d4_mmr_ann": 0,
+    "d4_mmr_batch": 0,
     "d4_mmr_diversify": 14,
     "d4_ngram_jaccard": 13,
     "d4_pii_scrub": 13,
@@ -196,7 +196,7 @@ LAST_DRIVER_CHECK: dict[str, int] = {
     "d5_gif_meta": 17,
     "d5_gif_pixels": 13,
     "d5_image_ahash": 15,
-    "d5_image_neardup": 15,
+    "d5_image_neardup": 0,
     "d5_jpeg_cmyk": 16,  # fixture bytes changed r16: JFIF APP0 dropped from Adobe blobs (ADVICE fix); pixels/oracle identical
     "d5_jpeg_meta": 14,  # r14: EXIF orientation column added (schema + fixture)
     "d5_jpeg_pixels": 17,  # fixture bytes changed r17: half the progressive class rewoven as PROGRESSIVE ARITHMETIC (SOF10); pixels/oracle identical
@@ -207,7 +207,7 @@ LAST_DRIVER_CHECK: dict[str, int] = {
     "d5_png_ahash": 13,
     "d5_png_meta": 14,
     "d5_png_pixels": 13,
-    "d5_scene_cuts": 15,
+    "d5_scene_cuts": 0,
     "d5_tar_meta": 17,
     "d5_wav_meta": 14,
     "d6_blocklist_filter": 14,
@@ -215,7 +215,7 @@ LAST_DRIVER_CHECK: dict[str, int] = {
     "d6_contamination": 17,
     "d6_crossdomain_lm": 14,
     "d6_curation_pipeline": 17,
-    "d6_dataset_card": 15,
+    "d6_dataset_card": 0,
     "d6_dsir_select": 15,
     "d6_dsir_select_hash": 16,  # NEW r16: corpus-scale xxhash64 feature path (VERDICT task 5)
     "d6_dedup_keep": 17,

@@ -460,7 +460,8 @@ def d4_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # brute force (tests/test_similarity.py).
     doc="D4: ANN cosine top-k via random-hyperplane LSH buckets — the "
     "linear-cost scale path; recall vs brute force asserted in tests "
-    "(operators/similarity.py:lsh_bucket_topk).",
+    "(operators/similarity.py:lsh_bucket_topk). Same function and rows "
+    "as d4_ann_lsh_rank, which adds the DuckDB oracle.",
 )
 def d4_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_testdata(spark, sf_dir, "embeddings")
@@ -509,24 +510,24 @@ def d4_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, neighbor_id, cos_sim, CAST(rnk AS BIGINT) AS rnk
     FROM ranked WHERE rnk <= 5
     """,
-    doc="D4: ANN-LSH's ORACLE-EXACT twin (the d4_minhash_lsh rank-mode "
-    "playbook applied to hyperplane LSH): identical bucketing topology "
-    "and within-bucket exact rerank as d4_ann_lsh, but the hyperplane "
-    "SIGNS are pure integer arithmetic — embeddings quantized to "
-    "micros (floor(x*1e6+0.5)), dotted with centered integer-LCG plane "
-    "components in BIGINT — so bucket assignment is SQL-stateable "
-    "bit-for-bit and the driver verifies the whole LSH pipeline, not "
-    "just its recall (operators/similarity.py:lsh_bucket_topk_"
-    "exactsign). A double-projection sign would sit one addition-"
-    "reorder ulp from a bucket flip; the integer path has no edge at "
-    "all. The production entry (d4_ann_lsh) keeps the double "
-    "projection and stays rows-only + recall-tested.",
+    doc="D4: ANN-LSH under the DuckDB oracle (the d4_minhash_lsh "
+    "rank-mode playbook applied to hyperplane LSH): the production "
+    "bucketing topology and within-bucket exact rerank of d4_ann_lsh, "
+    "whose hyperplane SIGNS are pure integer arithmetic — embeddings "
+    "quantized to micros (floor(x*1e6+0.5)), dotted with centered "
+    "integer-LCG plane components in BIGINT — so bucket assignment is "
+    "SQL-stateable bit-for-bit and the driver verifies the whole LSH "
+    "pipeline, not just its recall "
+    "(operators/similarity.py:lsh_bucket_topk). A double-projection "
+    "sign would sit one addition-reorder ulp from a bucket flip; the "
+    "integer path has no edge at all. d4_ann_lsh runs the same "
+    "function and stays as its rows-only entry.",
 )
 def d4_ann_lsh_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     emb = read_testdata(spark, sf_dir, "embeddings")
-    out = S.lsh_bucket_topk_exactsign(emb, k=5)
+    out = S.lsh_bucket_topk(emb, k=5)
     return out.withColumn("rnk", F.col("rnk").cast("bigint"))
 
 
@@ -604,11 +605,11 @@ def d4_ann_lsh_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-query integer overlap counts — the measurement that was "
     "previously only an engine-side test is now driver-checked in "
     "closed form (recall@5 = n_hit / n_exact; integers keep the hash "
-    "exact). The ANN side is the exactsign twin's SQL-stateable "
-    "topology — the SAME buckets as production d4_ann_lsh (sign "
-    "agreement test-pinned), so this row certifies the recall of the "
-    "deployed bucketing, closing the last engine-only behavior of the "
-    "rows-only ANN family (operators/similarity.py:ann_recall_at_k). "
+    "exact). The ANN side is the production d4_ann_lsh bucketing "
+    "(integer signs, SQL-stateable), so this row certifies the recall "
+    "of the deployed bucketing, closing the last engine-only behavior "
+    "of the rows-only ANN family (operators/similarity.py:"
+    "lsh_bucket_topk under recall_vs_exact). "
     "n_ann < 5 marks sparse buckets (singleton queries score 0/5) — "
     "exactly the signal a production ANN dashboard watches. Honest "
     "number: on this fixture mean recall@5 is ~0.04 — the embeddings "
@@ -625,7 +626,8 @@ def d4_ann_lsh_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d4_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_testdata(spark, sf_dir, "embeddings")
-    return S.ann_recall_at_k(emb, k=5, n_planes=8)
+    ann = S.lsh_bucket_topk(emb, k=5, n_planes=8)
+    return S.recall_vs_exact(emb, ann, k=5)
 
 
 @register(
@@ -707,8 +709,8 @@ def d4_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "come from the SAME centered integer-LCG stream (global plane "
     "index j = t*4 + p, component LCG(j*64+d)); table t's bucket is "
     "the 4-bit sign code over its own planes; candidates = pairs "
-    "sharing any table's bucket, DISTINCT before the exact rerank "
-    "(operators/similarity.py:lsh_multitable_topk_exactsign). "
+    "sharing any table's bucket, each pair ranked once "
+    "(operators/similarity.py:lsh_bucket_topk, n_tables=8). "
     "CALIBRATION on this worst-case near-uniform fixture (500 x 64-d, "
     "cosines concentrated near 0): single-table 8-plane d4_ann_recall "
     "= ~0.04 mean recall@5 at ~2 candidates/query; this topology "
@@ -718,15 +720,13 @@ def d4_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "candidate fan-out — that is the disclosed trade; on clustered "
     "corpora the same topology reaches high recall at a small "
     "fraction (the recall floor rises with any cluster structure, "
-    "test-pinned on the clustered fixture). The production double-"
-    "projection path takes the same lever via lsh_bucket_topk's "
-    "n_probe_bits multi-probe knob.",
+    "test-pinned on the clustered fixture). The same function's "
+    "n_probe_bits knob is the second lever "
+    "(d4_ann_multiprobe_recall).",
 )
 def d4_ann_multitable_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_testdata(spark, sf_dir, "embeddings")
-    ann = S.lsh_multitable_topk_exactsign(
-        emb, k=5, n_tables=8, n_planes=4
-    ).select("query_id", "neighbor_id")
+    ann = S.lsh_bucket_topk(emb, k=5, n_tables=8, n_planes=4)
     return S.recall_vs_exact(emb, ann, k=5)
 
 
@@ -805,7 +805,7 @@ def d4_ann_multitable_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "et al. 2007's idea at hamming radius 1): each query probes its "
     "own bucket plus the 8 buckets one sign-flip away, the identical "
     "8-plane topology as d4_ann_recall so the rows compare directly "
-    "(operators/similarity.py:lsh_bucket_topk_exactsign, "
+    "(operators/similarity.py:lsh_bucket_topk, "
     "n_probe_bits=1). The engine explodes 9 probe buckets per query; "
     "the oracle states the equivalent set declaratively — candidates "
     "are pairs with bit_count(xor(bucket_a, bucket_b)) <= 1 — so the "
@@ -818,9 +818,7 @@ def d4_ann_multitable_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d4_ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_testdata(spark, sf_dir, "embeddings")
-    ann = S.lsh_bucket_topk_exactsign(
-        emb, k=5, n_planes=8, n_probe_bits=1
-    ).select("query_id", "neighbor_id")
+    ann = S.lsh_bucket_topk(emb, k=5, n_planes=8, n_probe_bits=1)
     return S.recall_vs_exact(emb, ann, k=5)
 
 
@@ -903,8 +901,9 @@ def d4_ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="D4: RECALL@5 of the IVF path vs exact cosine top-5 — "
     "d4_ann_recall's driver-checkable measurement applied to the "
-    "second ANN family: the ANN side is the oracle-exact IVF twin's "
-    "assign/probe topology (d4_ann_ivf_rank), the exact side the "
+    "second ANN family: the ANN side is the integer IVF "
+    "assign/probe topology (d4_ann_ivf_rank, "
+    "operators/similarity.py:ivf_topk_exact), the exact side the "
     "blocked distributed matmul, joined into per-query integer "
     "counters by the shared recall_vs_exact "
     "(operators/similarity.py). IVF at 4/16 probes recalls far "
@@ -916,7 +915,7 @@ def d4_ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d4_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_testdata(spark, sf_dir, "embeddings")
-    ann = S.ivf_topk_exactseed(emb, k=5, n_centroids=16, n_probe=4)
+    ann = S.ivf_topk_exact(emb, k=5, n_centroids=16, n_probe=4)
     return S.recall_vs_exact(emb, ann, k=5)
 
 
@@ -1243,7 +1242,7 @@ def d4_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "iterations — and list assignment is the exact BIGINT dot of micros-"
     "quantized vectors, so every list membership is SQL-stateable "
     "bit-for-bit and the driver verifies the IVF structure end-to-end "
-    "(operators/similarity.py:ivf_topk_exactseed). The production entry "
+    "(operators/similarity.py:ivf_topk_exact, n_iter=0). The production entry "
     "(d4_ann_ivf) keeps the Lloyd-trained double centroids and stays "
     "rows-only + recall-tested.",
 )
@@ -1251,7 +1250,7 @@ def d4_ann_ivf_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     emb = read_testdata(spark, sf_dir, "embeddings")
-    out = S.ivf_topk_exactseed(emb, k=5, n_centroids=16, n_probe=4)
+    out = S.ivf_topk_exact(emb, k=5, n_centroids=16, n_probe=4)
     return out.withColumn("rnk", F.col("rnk").cast("bigint"))
 
 
@@ -1331,7 +1330,7 @@ def d4_ann_ivf_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(lcg_pick(id), id) — ivf_topk's smallest-xxhash64 uniform "
     "subsample restated in the engine's integer LCG so the truncated "
     "candidate SET is SQL-stateable bit-for-bit "
-    "(operators/similarity.py:_int_probe_rerank). The cap is ACTIVE "
+    "(operators/similarity.py:ivf_topk_exact). The cap is ACTIVE "
     "at the driver's sf0.01 (500 vectors / 16 lists, mean occupancy "
     "~31 > 16; asserted with planted occupancy in "
     "test_ivf_exactseed_cap_matches_reference), so the driver "
@@ -1341,7 +1340,7 @@ def d4_ann_ivf_capped_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     emb = read_testdata(spark, sf_dir, "embeddings")
-    out = S.ivf_topk_exactseed(
+    out = S.ivf_topk_exact(
         emb, k=5, n_centroids=16, n_probe=4, max_list_len=16
     )
     return out.withColumn("rnk", F.col("rnk").cast("bigint"))
@@ -1448,7 +1447,7 @@ def d4_ann_ivf_capped_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="D4: the DISTRIBUTED IVF trainer's ORACLE-EXACT twin — TWO "
     "chained full-corpus Lloyd iterations in pure integer arithmetic "
-    "(operators/similarity.py:ivf_topk_distexact; the g1/g3/BPE "
+    "(operators/similarity.py:ivf_topk_exact, n_iter=2; the g1/g3/BPE "
     "unrolled-iteration playbook, so iteration 2's assignment reads "
     "iteration 1's trained centroids and the oracle must state the "
     "whole loop): LCG seeds, exact BIGINT-dot assignment, centroid "
@@ -1467,7 +1466,7 @@ def d4_ann_ivf_dist_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     emb = read_testdata(spark, sf_dir, "embeddings")
-    out = S.ivf_topk_distexact(emb, k=5, n_centroids=16, n_probe=4)
+    out = S.ivf_topk_exact(emb, k=5, n_centroids=16, n_probe=4, n_iter=2)
     return out.withColumn("rnk", F.col("rnk").cast("bigint"))
 
 

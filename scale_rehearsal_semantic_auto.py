@@ -18,13 +18,46 @@ import sys
 import time
 
 
+def _replicated_emb(spark, sf_dir: str, mult: int):
+    """The embeddings corpus replicated mult times under fresh ids; each
+    copy after the first flips signs per (copy, dim) by an LCG — an
+    isometry per copy, with ~0 cosine across copies for dense vectors."""
+    from pyspark.sql import functions as F
+
+    emb = spark.read.parquet(
+        os.path.join(sf_dir, "embeddings.parquet")
+    ).select("vec_id", "embedding")
+    off = 10_000_000
+    parts = []
+    for k in range(mult):
+        if k == 0:
+            flipped = F.col("embedding")
+        else:
+            flipped = F.transform(
+                "embedding",
+                lambda v, i: v * (
+                    1 - 2 * ((i * 2654435761 + F.lit(k) * 40503 + 11)
+                             % 2147483647 % 2)
+                ).cast("float"),
+            )
+        parts.append(
+            emb.select(
+                (F.col("vec_id") + F.lit(k * off)).alias("vec_id"),
+                flipped.alias("embedding"),
+            )
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionAll(p)
+    return out
+
+
 def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from citydata_etl_spark.operators import similarity as S
-    from scale_rehearsal_ann import _replicated_emb
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

@@ -118,52 +118,87 @@ def test_ann_lsh_recall_vs_brute(spark, clustered_vecs):
     assert recall >= 0.5, f"ANN recall vs brute force too low: {recall}"
 
 
+def _lsh_model(rows, k, n_planes, n_probe_bits=0):
+    """Independent Python model of lsh_bucket_topk's single-table
+    contract: integer-LCG centered planes, micros-quantized embeddings,
+    exact integer sign bits, hamming-1 probes when n_probe_bits=1, exact
+    cosine rerank (HALF_UP at 4 digits), (cos DESC, id) ranks."""
+    import math
+
+    import numpy as np
+
+    ids = [r["vec_id"] for r in rows]
+    V = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
+         for r in rows}
+    mic = {i: [int(x) for x in np.floor(V[i] * 1e6 + 0.5)] for i in ids}
+    dim = len(mic[ids[0]])
+    m = 2147483647
+    planes = [
+        [((1103515245 * (p * dim + d) + 12345) % m) - 1073741823
+         for d in range(dim)]
+        for p in range(n_planes)
+    ]
+    bucket = {
+        i: sum(
+            1 << p for p in range(n_planes)
+            if sum(x * c for x, c in zip(mic[i], planes[p])) > 0
+        )
+        for i in ids
+    }
+
+    def cos(a, b):
+        d = float(V[a] @ V[b]) / (
+            math.sqrt(float(V[a] @ V[a])) * math.sqrt(float(V[b] @ V[b]))
+        )
+        return math.copysign(math.floor(abs(d) * 1e4 + 0.5) / 1e4, d)
+
+    expect = set()
+    for q in ids:
+        probes = {bucket[q]}
+        if n_probe_bits:
+            probes |= {bucket[q] ^ (1 << p) for p in range(n_planes)}
+        cands = [n for n in ids if n != q and bucket[n] in probes]
+        ranked = sorted(cands, key=lambda n: (-cos(q, n), n))[:k]
+        for rnk, n in enumerate(ranked, 1):
+            expect.add((q, n, cos(q, n), rnk))
+    return expect
+
+
 def test_ann_lsh_exactsign_recall_and_sign_agreement(spark, clustered_vecs):
-    """The oracle-exact integer-sign twin must (a) keep recall vs brute
-    force, and (b) assign the SAME bucket as the double-projection
-    production path for every vector whose projections sit clear of
-    the micro-quantization edge — on this corpus that is all of them,
-    so the two paths' outputs coincide exactly."""
+    """lsh_bucket_topk's integer signs must (a) keep recall vs brute
+    force on the clustered corpus, with multi-probe only widening, and
+    (b) agree BIT-FOR-BIT with an independent Python model of the
+    integer-sign contract (_lsh_model), single-bucket and hamming-1
+    multi-probe, on the diffuse sf0.001 embeddings at the catalog's
+    8 planes (there the buckets decide the answer), so the Spark
+    pipeline and the DuckDB oracle are two of three independent
+    statements of the same function."""
+    from tests.conftest import SF_SMOKE
+
+    from citydata_etl_spark.sources.readers import read_testdata
+
+    def picks(emb, **kw):
+        return {
+            (r["query_id"], r["neighbor_id"], r["cos_sim"], r["rnk"])
+            for r in S.lsh_bucket_topk(emb, **kw).collect()
+        }
+
     brute = {
         (r["query_id"], r["neighbor_id"])
         for r in S.brute_force_topk(clustered_vecs, k=3).collect()
     }
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in S.lsh_bucket_topk_exactsign(
-            clustered_vecs, k=3, n_planes=4
-        ).collect()
-    }
-    recall = len(brute & exact) / len(brute)
+    got = picks(clustered_vecs, k=3, n_planes=4)
+    recall = len(brute & {(q, n) for q, n, _, _ in got}) / len(brute)
     assert recall >= 0.5, f"exact-sign ANN recall too low: {recall}"
-    prod = {
-        (r["query_id"], r["neighbor_id"], r["cos_sim"], r["rnk"])
-        for r in S.lsh_bucket_topk(clustered_vecs, k=3, n_planes=4).collect()
-    }
-    twin = {
-        (r["query_id"], r["neighbor_id"], r["cos_sim"], r["rnk"])
-        for r in S.lsh_bucket_topk_exactsign(
-            clustered_vecs, k=3, n_planes=4
-        ).collect()
-    }
-    assert twin == prod
+    got_mp = picks(clustered_vecs, k=3, n_planes=4, n_probe_bits=1)
+    assert len(got_mp) >= len(got)  # probing only widens
 
-    # the MULTI-PROBE forms must also coincide (same buckets, same
-    # hamming-1 probe set)
-    prod_mp = {
-        (r["query_id"], r["neighbor_id"], r["cos_sim"], r["rnk"])
-        for r in S.lsh_bucket_topk(
-            clustered_vecs, k=3, n_planes=4, n_probe_bits=1
-        ).collect()
-    }
-    twin_mp = {
-        (r["query_id"], r["neighbor_id"], r["cos_sim"], r["rnk"])
-        for r in S.lsh_bucket_topk_exactsign(
-            clustered_vecs, k=3, n_planes=4, n_probe_bits=1
-        ).collect()
-    }
-    assert twin_mp == prod_mp
-    assert len(twin_mp) >= len(twin)  # probing only widens
+    emb = read_testdata(spark, SF_SMOKE, "embeddings")
+    rows = emb.collect()
+    for bits in (0, 1):
+        assert picks(emb, k=5, n_planes=8, n_probe_bits=bits) == _lsh_model(
+            rows, k=5, n_planes=8, n_probe_bits=bits
+        ), f"n_probe_bits={bits}"
 
 
 def test_lsh_multitable_lifts_recall(spark, clustered_vecs):
@@ -171,41 +206,28 @@ def test_lsh_multitable_lifts_recall(spark, clustered_vecs):
     single-table topology at the same total plane budget (a true
     neighbor only needs ONE collision), and (b) reach high recall on
     clustered data at a SMALL candidate fraction — the claim the
-    d4_ann_multitable_recall entry doc makes. Also pins the
-    plane-stream contract: L=1 multitable == the single-table
-    exactsign (same global LCG plane indices)."""
+    d4_ann_multitable_recall entry doc makes. A pair colliding in
+    several tables must still be ranked once."""
     brute = {
         (r["query_id"], r["neighbor_id"])
         for r in S.brute_force_topk(clustered_vecs, k=3).collect()
     }
 
     def recall(picks):
-        got = {(r["query_id"], r["neighbor_id"]) for r in picks.collect()}
+        got = {(r["query_id"], r["neighbor_id"]) for r in picks}
         return len(brute & got) / len(brute)
 
     single = recall(
-        S.lsh_bucket_topk_exactsign(clustered_vecs, k=3, n_planes=8)
+        S.lsh_bucket_topk(clustered_vecs, k=3, n_planes=8).collect()
     )
-    multi = recall(
-        S.lsh_multitable_topk_exactsign(
-            clustered_vecs, k=3, n_tables=2, n_planes=4
-        )
-    )
+    picks = S.lsh_bucket_topk(
+        clustered_vecs, k=3, n_tables=2, n_planes=4
+    ).collect()
+    multi = recall(picks)
     assert multi >= single, f"multi-table lowered recall: {multi} < {single}"
     assert multi >= 0.8, f"clustered multi-table recall too low: {multi}"
-
-    # L=1 degenerates to the single-table topology bit-for-bit
-    one = {
-        tuple(r) for r in S.lsh_multitable_topk_exactsign(
-            clustered_vecs, k=3, n_tables=1, n_planes=8
-        ).collect()
-    }
-    base = {
-        tuple(r) for r in S.lsh_bucket_topk_exactsign(
-            clustered_vecs, k=3, n_planes=8
-        ).collect()
-    }
-    assert one == base
+    pairs = [(r["query_id"], r["neighbor_id"]) for r in picks]
+    assert len(pairs) == len(set(pairs))
 
 
 def test_mmr_batch_ann_full_probe_equals_exact(spark):
@@ -251,15 +273,18 @@ def test_mmr_batch_ann_full_probe_equals_exact(spark):
 
 
 def test_ann_recall_at_k_counts_and_cross_check(spark, clustered_vecs):
-    """ann_recall_at_k's integer counters must be internally consistent
+    """recall_vs_exact's integer counters over lsh_bucket_topk's picks
+    must be internally consistent
     (n_hit <= min(n_exact, n_ann), n_exact <= k) and must reproduce the
     set-overlap recall computed independently from the two constituent
     operators; on the clustered corpus the aggregate recall@3 is high
     (same bound as the constituent recall tests)."""
     out = {
         r["query_id"]: (r["n_exact"], r["n_ann"], r["n_hit"])
-        for r in S.ann_recall_at_k(
-            clustered_vecs, k=3, n_planes=4
+        for r in S.recall_vs_exact(
+            clustered_vecs,
+            S.lsh_bucket_topk(clustered_vecs, k=3, n_planes=4),
+            k=3,
         ).collect()
     }
     assert set(out) == {r["vec_id"] for r in clustered_vecs.collect()}
@@ -272,9 +297,7 @@ def test_ann_recall_at_k_counts_and_cross_check(spark, clustered_vecs):
     }
     ann = {
         (r["query_id"], r["neighbor_id"])
-        for r in S.lsh_bucket_topk_exactsign(
-            clustered_vecs, k=3, n_planes=4
-        ).collect()
+        for r in S.lsh_bucket_topk(clustered_vecs, k=3, n_planes=4).collect()
     }
     assert sum(h for _, _, h in out.values()) == len(brute & ann)
     recall = sum(h for _, _, h in out.values()) / sum(
@@ -297,8 +320,8 @@ def test_ann_ivf_exactseed_recall_and_model_agreement(spark, clustered_vecs):
         (r["query_id"], r["neighbor_id"])
         for r in S.brute_force_topk(clustered_vecs, k=3).collect()
     }
-    out = S.ivf_topk_exactseed(
-        clustered_vecs, k=5, n_centroids=16, n_probe=4
+    out = S.ivf_topk_exact(
+        clustered_vecs, k=5, n_centroids=16, n_probe=4, n_iter=0
     ).collect()
     got = {(r["query_id"], r["neighbor_id"], r["cos_sim"], r["rnk"])
            for r in out}
@@ -347,13 +370,13 @@ def test_ann_ivf_distexact_matches_model(spark, clustered_vecs):
     centroid — then assignment/probes against the final centroids and
     exact cosine rerank. Also: each iteration must actually move at
     least one centroid, so the test can't pass vacuously on the
-    exactseed topology or on a single-iteration trainer."""
+    n_iter=0 (seed-centroid) topology or on a single-iteration trainer."""
     import math
 
     import numpy as np
 
-    out = S.ivf_topk_distexact(
-        clustered_vecs, k=5, n_centroids=16, n_probe=4
+    out = S.ivf_topk_exact(
+        clustered_vecs, k=5, n_centroids=16, n_probe=4, n_iter=2
     ).collect()
     got = {(r["query_id"], r["neighbor_id"], r["cos_sim"], r["rnk"])
            for r in out}
@@ -692,7 +715,7 @@ def test_ivf_posture_for_derivation():
 
 def test_ivf_exactseed_cap_matches_reference(spark, clustered_vecs):
     """r16 VERDICT task 1: the capped production posture under an
-    oracle-exact statement. ivf_topk_exactseed(max_list_len=m) must
+    oracle-exact statement. ivf_topk_exact(max_list_len=m) must
     agree BIT-FOR-BIT with an independent Python model of the capped
     contract — LCG seed pick, integer-dot assign/probe, lists
     truncated to their m members with the smallest (LCG(id), id),
@@ -705,10 +728,9 @@ def test_ivf_exactseed_cap_matches_reference(spark, clustered_vecs):
     import math
 
     import numpy as np
-    from pyspark.sql import Window as W
 
     cap = 3
-    out = S.ivf_topk_exactseed(
+    out = S.ivf_topk_exact(
         clustered_vecs, k=5, n_centroids=16, n_probe=4, max_list_len=cap
     ).collect()
     got = {(r["query_id"], r["neighbor_id"], r["cos_sim"], r["rnk"])
@@ -761,7 +783,7 @@ def test_ivf_exactseed_cap_matches_reference(spark, clustered_vecs):
     # the cap changed the answer (not a no-op on this corpus)
     uncapped = {
         tuple(r)
-        for r in S.ivf_topk_exactseed(
+        for r in S.ivf_topk_exact(
             clustered_vecs, k=5, n_centroids=16, n_probe=4
         ).collect()
     }
@@ -771,16 +793,10 @@ def test_ivf_exactseed_cap_matches_reference(spark, clustered_vecs):
     # the driver's sf0.01: occupancy exceeds the cap
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     occ = (
-        S._lcg_seed_rows(emb, 16, "vec_id", "embedding")
-        .crossJoin(S._int_base(emb, "vec_id", "embedding"))
-        .withColumn("idot", S._idot(F.col("vi"), F.col("ci")))
-        .withColumn(
-            "prnk",
-            F.row_number().over(
-                W.partitionBy("id").orderBy(
-                    F.col("idot").desc(), F.col("cidx"))),
+        S._int_probe(
+            S._int_base(emb, "vec_id", "embedding"),
+            S._lcg_seed_rows(emb, 16, "vec_id", "embedding"), 1,
         )
-        .filter(F.col("prnk") == 1)
         .groupBy("cidx").count()
         .agg(F.max("count")).collect()[0][0]
     )
@@ -1278,6 +1294,16 @@ def test_zero_norm_embedding_does_not_poison_ann(spark, clustered_vecs):
         assert all(
             n == 3 for q, n in per_query.items() if q != 999
         ), per_query
+        # unique ids give unique pairs without a dedup stage: no
+        # (query, neighbor) repeats and every query's ranks are dense
+        pairs = [(r["query_id"], r["neighbor_id"]) for r in rows]
+        assert len(pairs) == len(set(pairs))
+        ranks = {}
+        for r in rows:
+            ranks.setdefault(r["query_id"], []).append(r["rnk"])
+        assert all(
+            sorted(v) == list(range(1, len(v) + 1)) for v in ranks.values()
+        )
 
 
 def test_distributed_kmeans_matches_numpy_full_corpus(spark, clustered_vecs):
@@ -1576,13 +1602,13 @@ def test_winnowing_matches_python_reference(spark):
 
 
 def test_ann_ivf_distexact_training_not_vacuous(spark):
-    """On the real embeddings corpus the trained twin must produce a
-    DIFFERENT top-k set than the seed-centroid twin — otherwise the two
-    chained Lloyd iterations would be dead weight and the dist-trainer
-    oracle would be re-verifying the exactseed topology. (On the tight
-    synthetic cluster fixture the two can legitimately coincide; the
-    sf0.001 testdata is diffuse enough that training reshuffles roughly
-    two-thirds of the pairs.)"""
+    """On the real embeddings corpus ivf_topk_exact with n_iter=2 must
+    produce a DIFFERENT top-k set than with n_iter=0 (seed centroids) —
+    otherwise the two chained Lloyd iterations would be dead weight and
+    the dist-trainer oracle would be re-verifying the seed topology.
+    (On the tight synthetic cluster fixture the two can legitimately
+    coincide; the sf0.001 testdata is diffuse enough that training
+    reshuffles roughly two-thirds of the pairs.)"""
     from tests.conftest import SF_SMOKE
 
     from citydata_etl_spark.sources.readers import read_testdata
@@ -1590,14 +1616,14 @@ def test_ann_ivf_distexact_training_not_vacuous(spark):
     emb = read_testdata(spark, SF_SMOKE, "embeddings")
     seeded = {
         tuple(r)
-        for r in S.ivf_topk_exactseed(
-            emb, k=5, n_centroids=16, n_probe=4
+        for r in S.ivf_topk_exact(
+            emb, k=5, n_centroids=16, n_probe=4, n_iter=0
         ).collect()
     }
     trained = {
         tuple(r)
-        for r in S.ivf_topk_distexact(
-            emb, k=5, n_centroids=16, n_probe=4
+        for r in S.ivf_topk_exact(
+            emb, k=5, n_centroids=16, n_probe=4, n_iter=2
         ).collect()
     }
     assert seeded and trained
