@@ -1357,11 +1357,15 @@ def update_dedup_index(
     ).withColumn("first_seen_batch", F.lit(batch_no).cast("bigint"))
     # scheme-agnostic probes (file://, hdfs://, s3a://). An absent
     # marker means "never initialized" ONLY when the directory holds no
-    # table data — an absent marker OVER existing buckets is a crashed
-    # prior ingest, and re-initializing would OVERWRITE the whole index
-    # (silently losing every earlier batch's digests). That crash heals
-    # by re-running the ingest that died (merge_upsert's contract); this
-    # function cannot reconstruct that batch, so it refuses loudly.
+    # table data. Over existing buckets it is a crashed prior ingest:
+    # a merge that died mid-swap left its staged buckets pending, and
+    # the merge's own heal finishes that swap (re-committing the
+    # crashed batch), after which this batch proceeds normally. With no
+    # swap pending this function cannot tell a complete index from a
+    # partial one, and re-initializing would OVERWRITE the whole index
+    # (silently losing every earlier batch's digests), so it refuses.
+    if M.read_commit_token(spark, index_path) is None:
+        M._heal_swap(spark, index_path)
     if M.read_commit_token(spark, index_path) is None:
         fs, p = M._fs_and_path(spark, index_path)
         has_data = fs.exists(p) and any(
@@ -1371,10 +1375,15 @@ def update_dedup_index(
         if has_data:
             raise RuntimeError(
                 f"dedup index at {index_path} has bucket data but no "
-                "_COMMIT marker — a prior ingest crashed mid-merge. "
-                "Re-run THAT batch's update_dedup_index first (the merge "
-                "heals and re-commits); initializing here would overwrite "
-                "the index and lose every earlier batch's digests."
+                "_COMMIT marker and no pending bucket swap — the first "
+                "batch's initialization crashed, or a merge crashed after "
+                "its swap but before re-committing. Inspect it with "
+                "read_bucketed_control(spark, path, require_commit=False):"
+                " if it holds every earlier batch, re-commit it with "
+                "sources.merge.write_commit_marker and retry; otherwise "
+                "delete the index and re-ingest every batch in order. "
+                "Initializing here would overwrite the index and lose "
+                "every earlier batch's digests."
             )
         M.write_bucketed_control(
             collapsed, index_path, "norm_sha", n_buckets=n_buckets

@@ -3471,7 +3471,10 @@ def ahash_neardup_pairs(
     scale; candidate cost follows chunk-bucket occupancy.
 
     Input: (media_id, ahash_lo, ahash_hi) from image_ahash. Output:
-    (media_a, media_b, hamming), media_a < media_b."""
+    (media_a, media_b, hamming), media_a < media_b, one row per pair. A
+    media id may carry several hash rows (say, one per frame or
+    rendition): it never pairs with itself, and a pair reports the
+    smallest hamming over the two ids' hashes."""
     from citydata_etl_spark.caching import scoped_persist
 
     n_chunks = max_hamming + 1
@@ -3558,8 +3561,9 @@ def ahash_neardup_pairs(
             ).alias("hamming"),
         )
     )
-    # expansion 2: cross-group pairs — each unordered media pair
-    # appears exactly once (the hash pair is ordered), re-ordered by id
+    # expansion 2: cross-group pairs, re-ordered by id. With one hash
+    # per id each unordered media pair appears exactly once (the hash
+    # pair is ordered); an id with several hashes can meet itself here
     across = (
         hp.join(
             ma.select(
@@ -3577,13 +3581,20 @@ def ahash_neardup_pairs(
             ),
             ["lo_b", "hi_b"],
         )
+        .filter(F.col("m1") != F.col("m2"))
         .select(
             F.least("m1", "m2").alias("media_a"),
             F.greatest("m1", "m2").alias("media_b"),
             "hamming",
         )
     )
-    return within.unionByName(across)
+    # ids with several hashes can also repeat a pair across hash pairs
+    # and across the two expansions: keep the closest
+    return (
+        within.unionByName(across)
+        .groupBy("media_a", "media_b")
+        .agg(F.min("hamming").alias("hamming"))
+    )
 
 
 def _apply_exif_orientation(px, orientation: int):

@@ -152,7 +152,7 @@ LAST_DRIVER_CHECK: dict[str, int] = {
     "d4_containment": 15,
     "d4_cosine_topk": 13,
     "d4_dedup_groups": 13,
-    "d4_dedup_index_ingest": 15,
+    "d4_dedup_index_ingest": 0,
     "d4_dedup_report": 15,
     "d4_doc_fingerprint": 13,
     "d4_dup_passage": 13,
@@ -329,22 +329,22 @@ LAST_DRIVER_CHECK: dict[str, int] = {
     "t7_stream_left_outer_join": 15,
     "t7_stream_stream_join": 15,
     "t8_stream_dedup_watermark": 16,
-    "t9_streaming_upsert": 16,
+    "t9_streaming_upsert": 0,
     "u10_restore": 13,
     "u11_incremental_view": 13,
-    "u12_deletion_vectors": 15,
-    "u13_cascade_delete": 16,
-    "u14_multi_table_txn": 16,
+    "u12_deletion_vectors": 0,
+    "u13_cascade_delete": 0,
+    "u14_multi_table_txn": 0,
     "u15_governed_view": 16,
     "u16_policy_versioned_read": 17,
-    "u17_wap_publish": 17,
+    "u17_wap_publish": 0,
     "u1_keyed_update": 17,
     "u2_masked_update": 17,
     "u3_status_routing": 17,
     "u4_scd2_history": 17,
-    "u5_merge_upsert": 15,
-    "u6_keyed_delete": 16,
-    "u7_evolving_merge": 17,
+    "u5_merge_upsert": 0,
+    "u6_keyed_delete": 0,
+    "u7_evolving_merge": 0,
     "u8_time_travel": 17,
     "u9_change_feed": 13,
 }

@@ -550,10 +550,12 @@ def u4_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     "control table — the at-scale replacement for the reference's "
     "whole-CSV rewrite per update (lambda/update-control.py:29-36). Only "
     "buckets containing updated keys are read (partition pruning) and "
-    "rewritten (dynamic partition overwrite); matched non-NULL update "
-    "columns replace, NULL preserves, unmatched keys insert "
-    "(sources/merge.py:merge_upsert). The oracle replays the same merge "
-    "relationally; the Spark side goes through the REAL write+readback.",
+    "rewritten, through the staged bucket swap shared with u6's delete "
+    "(new rows staged, per-bucket atomic renames, _COMMIT marker last); "
+    "matched non-NULL update columns replace, NULL preserves, unmatched "
+    "keys insert (sources/merge.py:merge_upsert). The oracle replays the "
+    "same merge relationally; the Spark side goes through the REAL "
+    "write+readback.",
 )
 def u5_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -1175,13 +1177,13 @@ def s15_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     "primitive (sources/merge.py:delete_keys). Every 7th key is erased: "
     "survivors are staged fully-materialized to a hidden directory "
     "BEFORE any old file is dropped, then affected bucket directories "
-    "swap atomically-per-bucket with the _COMMIT marker last — a crash "
-    "mid-delete leaves the table visibly uncommitted and re-running the "
-    "same delete heals AND completes the erasure. Rewrite cost scales "
-    "with the delete set's bucket spread, never table size; the "
-    "fully-emptied-bucket edge (dynamic partition overwrite would "
-    "silently keep its files) is handled and pinned by "
-    "tests/test_etl.py::test_delete_keys_empties_whole_bucket.",
+    "swap atomically-per-bucket with the _COMMIT marker last — the one "
+    "staged bucket swap u5's merge shares. A crash mid-delete leaves "
+    "the table visibly uncommitted and the next delete or merge heals "
+    "first, completing the erasure. Rewrite cost scales with the "
+    "delete set's bucket spread, never table size; a fully-emptied "
+    "bucket loses its directory (the manifest's erased state), pinned "
+    "by tests/test_etl.py::test_delete_keys_empties_whole_bucket.",
 )
 def u6_keyed_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -1235,9 +1237,10 @@ def u6_keyed_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     "files are written ONCE as an immutable version; each of two "
     "delete waves appends only its key set to that version's tombstone "
     "sidecar (cost proportional to the delete set, never the table — "
-    "at 100 TB a GDPR delete becomes a kilobyte append); readers "
-    "resolve one atomic `_BASE` pointer to a consistent (base, "
-    "sidecar) pair and subtract the deduplicated sidecar with a "
+    "at 100 TB a GDPR delete becomes a kilobyte append); the table is "
+    "a one-table transaction root (sources/transactions.py), so "
+    "readers resolve its one atomic `_TXN` pointer to a consistent "
+    "(base, sidecar) pair and subtract the deduplicated sidecar with a "
     "broadcast LEFT ANTI join at scan time. tests/test_etl.py proves "
     "the base data files are BYTE-IDENTICAL across both waves (the "
     "merge-on-read claim itself), that purge_deletions folds the "
@@ -1326,7 +1329,7 @@ def u12_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     "o_custkey, line items by the erased orders' keys — across three "
     "merge-on-read tables WITHOUT rewriting any base file: each "
     "table's erasure is one tombstone-sidecar append (sources/"
-    "deletion.py, the u12 machinery with the atomic _BASE pointer), "
+    "deletion.py, the u12 machinery with the atomic _TXN pointer), "
     "so the erasure cost is proportional to the affected keys, never "
     "the 100 TB of fact data, and the physical purge is deferred to "
     "each table's own compaction window. The cascade derivation is "
@@ -1430,8 +1433,8 @@ def u13_cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="U14 (cross-table ATOMIC transactions): a customer table and "
     "its derived per-customer order-count table evolve TOGETHER under "
-    "one catalog-level pointer (sources/transactions.py — the "
-    "deletion-vector _BASE idiom lifted to a table GROUP): txn v0 "
+    "one catalog-level pointer (sources/transactions.py — the same "
+    "_TXN pointer u12's one-table deletion-vector roots use): txn v0 "
     "publishes both, txn v1 retracts a cohort from both, and each "
     "commit writes every table's immutable v-dir first, then flips "
     "the single _TXN pointer LAST — so a reader that resolves the "

@@ -9,24 +9,21 @@ subtract the tombstones at scan time. This is the layout decision
 behind Delta/Iceberg deletion vectors / position deletes, expressed
 with plain parquet + an anti-join — at 100 TB a GDPR-sized delete
 becomes a kilobyte append instead of a table rewrite, and the rewrite
-cost is deferred to a compaction that can run whenever it is cheap
-(u6's staged-swap machinery is the copy-on-write analogue).
+cost is deferred to a compaction that can run whenever it is cheap.
 
-Layout (unified with sources/snapshots.py's manifest story — ONE
-crash-consistency idiom in the repo, the atomic pointer swap):
+A merge-on-read table is a ONE-TABLE transaction root
+(sources/transactions.py), so it shares that module's version pointer,
+crash contract and vacuum:
 
     {root}/base-v{N}/   immutable base data files for version N
     {root}/_dv-v{N}/    append-only tombstone sidecar FOR version N
-    {root}/_BASE        pointer file naming the live N (tmp + atomic
-                        FileContext Rename.OVERWRITE via
-                        merge.py:write_small_file, swapped LAST)
+    {root}/_TXN         the transaction pointer naming the live N
 
-Readers resolve `_BASE` once and read a CONSISTENT (base, sidecar)
-pair; `purge_deletions` publishes a folded version and flips the
-pointer, so there is NO reader-visible missing-path window (the
-two-rename swap this replaced had one). Old version dirs are retained
-for in-flight readers and reclaimed by `vacuum_mor_versions` — the
-same retained-versions-then-vacuum contract as snapshots.py.
+Readers resolve the pointer once and read a CONSISTENT (base, sidecar)
+pair; `purge_deletions` commits a folded version, so there is NO
+reader-visible missing-path window. Old version dirs are retained for
+in-flight readers and reclaimed by `vacuum_txn_versions`. Every path
+goes through the Hadoop FileSystem API, so a root may be a URI.
 
 Contracts:
   - the sidecar is append-only; repeated appends of the same key are
@@ -40,56 +37,34 @@ Contracts:
     snapshots/merge): a delete appended to v{N}'s sidecar while a
     purge is folding v{N} is silently absent from v{N+1}. Readers
     never serialize and never observe a partial state;
-  - purge crash points: dying during the v{N+1} write leaves the
-    pointer at N (staged dir is garbage; retry overwrites it); dying
-    after the pointer swap leaves v{N} dirs as garbage for vacuum.
-    No crash point loses committed deletes or exposes partial data.
+  - purge crash points are commit_txn's: dying during the v{N+1}
+    write leaves the pointer at N (the staged dir is garbage; a retry
+    overwrites it); dying after the pointer swap leaves v{N} dirs as
+    garbage for vacuum. No crash point loses committed deletes or
+    exposes partial data.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from citydata_etl_spark.sources.merge import (
-    read_small_file as _read_small_file,
-    write_small_file as _write_small_file,
+from citydata_etl_spark.sources.merge import _fs_and_path
+from citydata_etl_spark.sources.transactions import (
+    _committed_version,
+    _table_dir,
+    commit_txn,
+    read_txn_table,
 )
-
-_POINTER = "_BASE"
-
-
-def _base_dir(root: str, version: int) -> str:
-    return os.path.join(root, f"base-v{version}")
-
-
-def _dv_dir(root: str, version: int) -> str:
-    return os.path.join(root, f"_dv-v{version}")
-
-
-def _live_version(spark: SparkSession, root: str) -> int:
-    raw = _read_small_file(spark, os.path.join(root, _POINTER))
-    if raw is None:
-        raise RuntimeError(
-            f"merge-on-read table at {root} has no committed version "
-            "(write_mor_table never ran, or its pointer swap did not)"
-        )
-    return int(raw.decode("ascii"))
 
 
 def write_mor_table(df: DataFrame, root: str) -> None:
     """Create the table: base files as immutable version 0, pointer
-    swapped LAST (data first, pointer second — the snapshots._commit
-    order), so a crash mid-write leaves no committed table rather
-    than a committed partial one. Deletes never touch these files
-    again (the test asserts the file listing is byte-identical across
-    delete waves)."""
-    df.write.mode("overwrite").parquet(_base_dir(root, 0))
-    _write_small_file(
-        df.sparkSession, os.path.join(root, _POINTER), b"0"
-    )
+    swapped LAST (commit_txn), so a crash mid-write leaves no
+    committed table rather than a committed partial one. Deletes never
+    touch these files again (the test asserts the file listing is
+    byte-identical across delete waves)."""
+    commit_txn(df.sparkSession, root, {"base": df})
 
 
 def append_deletion_vector(keys: DataFrame, root: str) -> None:
@@ -97,8 +72,8 @@ def append_deletion_vector(keys: DataFrame, root: str) -> None:
     LIVE version's tombstone sidecar. No base file is read, listed, or
     written — the cost is proportional to the DELETE SET, never the
     table."""
-    v = _live_version(keys.sparkSession, root)
-    keys.write.mode("append").parquet(_dv_dir(root, v))
+    v = _committed_version(keys.sparkSession, root)
+    keys.write.mode("append").parquet(_table_dir(root, "_dv", v))
 
 
 def read_mor_table(spark: SparkSession, root: str, key: str) -> DataFrame:
@@ -110,12 +85,12 @@ def read_mor_table(spark: SparkSession, root: str, key: str) -> DataFrame:
     appends don't change results) and broadcast into a LEFT ANTI join;
     filters and column pruning on the result still push down to the
     base scan because the anti-join only references the key column."""
-    v = _live_version(spark, root)
-    base = spark.read.parquet(_base_dir(root, v))
-    dv_path = _dv_dir(root, v)
-    if not os.path.exists(dv_path):
+    v = _committed_version(spark, root)
+    base = read_txn_table(spark, root, "base", v)
+    fs, dv_path = _fs_and_path(spark, _table_dir(root, "_dv", v))
+    if not fs.exists(dv_path):
         return base
-    dv = spark.read.parquet(dv_path).select(key).distinct()
+    dv = read_txn_table(spark, root, "_dv", v).select(key).distinct()
     return base.join(F.broadcast(dv), key, "left_anti")
 
 
@@ -127,35 +102,9 @@ def purge_deletions(spark: SparkSession, root: str, key: str) -> None:
     bump, so no delete ever sits on the read path's critical section.
 
     Readers racing the purge are safe at every instant: the pointer
-    flip is the atomic OVERWRITE rename of write_small_file, and the
-    superseded v{N} dirs stay on disk for in-flight readers until
-    `vacuum_mor_versions`. WRITERS must serialize with the purge
-    (module contract): a tombstone appended to v{N} after the fold
-    started is not reflected in v{N+1}."""
-    v = _live_version(spark, root)
-    visible = read_mor_table(spark, root, key)
-    visible.write.mode("overwrite").parquet(_base_dir(root, v + 1))
-    _write_small_file(
-        spark, os.path.join(root, _POINTER), str(v + 1).encode("ascii")
-    )
-
-
-def vacuum_mor_versions(spark: SparkSession, root: str) -> list[int]:
-    """Reclaim every superseded version's base + sidecar dirs, keeping
-    only the live one. MAINTENANCE OP with the snapshots-vacuum
-    contract: run it after in-flight readers of old versions have
-    drained (a grace period in production) — a reader that resolved
-    the pointer before a purge and is still scanning v{N} loses its
-    files here, never to a purge itself. Returns the versions
-    removed."""
-    import re
-    import shutil
-
-    live = _live_version(spark, root)
-    removed = []
-    for name in os.listdir(root):
-        m = re.fullmatch(r"(?:base|_dv)-v(\d+)", name)
-        if m and int(m.group(1)) != live:
-            shutil.rmtree(os.path.join(root, name))
-            removed.append(int(m.group(1)))
-    return sorted(set(removed))
+    flip is commit_txn's atomic rename, and the superseded v{N} dirs
+    stay on disk for in-flight readers until `vacuum_txn_versions`.
+    WRITERS must serialize with the purge (module contract): a
+    tombstone appended to v{N} after the fold started is not reflected
+    in v{N+1}."""
+    commit_txn(spark, root, {"base": read_mor_table(spark, root, key)})

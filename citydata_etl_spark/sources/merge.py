@@ -1,46 +1,59 @@
-"""Keyed MERGE (upsert) for control tables (SURVEY.md §2.3).
+"""Keyed MERGE (upsert) and DELETE for control tables (SURVEY.md §2.3).
 
 The reference's signature write is a keyed point update applied by
 rewriting the WHOLE control CSV through one writer (reference
 lambda/update-control.py:29-36, lambda/collect-data.py:111-135) — a
 single-writer full-table rewrite that cannot scale past one bounded table.
 This module is the at-scale form SURVEY §2.3 calls for (Delta MERGE INTO
-semantics, parquet-native so it runs on the baked-in stack):
+semantics, parquet-native so it runs on the baked-in stack). The table is
+partitioned by bucket = pmod(xxhash64(key), B), one `bucket=b` directory
+per bucket, and both writes — merge_upsert and delete_keys — are the same
+staged bucket swap (_rewrite_buckets), differing only in the relation
+that builds an affected bucket's new rows:
 
-  layout   control table partitioned by bucket = pmod(xxhash64(key), B)
-  merge    join ONLY the buckets containing updated keys against the
-           update set (co-partitioned equi-join on the key)
-  commit   dynamic partition overwrite — untouched buckets are neither
-           read nor rewritten; the partition swap is atomic PER BUCKET
-           via the parquet commit protocol
+  1. heal a swap an earlier writer left pending (_heal_swap)
+  2. bucket the input and collect the affected bucket ids (bounded by B,
+     a layout constant, never by data size)
+  3. read ONLY the affected buckets (partition pruning on the bucket
+     filter); untouched buckets are neither read nor rewritten
+  4. stage the new rows under the hidden `.delete_staging` directory,
+     fully on disk before any live file is touched
+  5. write the typed `_AFFECTED` manifest: `b:s` (rows staged) or `b:e`
+     (bucket fully erased — only a delete produces these)
+  6. drop `_COMMIT`
+  7. per affected bucket, by atomic renames only: the live directory
+     steps aside into `.delete_trash`, the staged one renames into place
+  8. delete trash and staging, write a fresh `_COMMIT` token
 
-Consistency contract (narrower than Delta's MERGE — stated, not implied):
-  - SINGLE WRITER. There is no commit log or lock; two concurrent
-    merge_upsert calls on the same path can interleave bucket overwrites
-    and silently lose one writer's updates. Serialize writers externally
-    (the reference's Lambda is effectively single-writer too).
-  - PER-BUCKET atomicity only. A failure mid-commit can leave some
-    affected buckets merged and others not — re-running the SAME merge
-    heals the table (the merge is idempotent: coalesce(update, stored)
-    applied twice is the same row), but readers in between may see a
-    partially-applied batch across buckets.
-  - _COMMIT marker, swapped LAST. Every completed write (init or merge)
-    finishes by swapping a `_COMMIT` marker carrying a fresh token —
-    buckets first, marker last, via a tmp-file + rename (atomic on
-    rename-capable stores; on S3-style stores the rename is copy+delete
-    and the guard weakens to read-after-write). Readers get a
-    consistent-view guard WITHOUT a Delta log: a missing marker means
-    init-in-progress or a crash mid-commit (read_bucketed_control
-    refuses by default); a token that CHANGED between the start and end
-    of a read means a writer overlapped the scan — capture it with
-    read_commit_token before, re-check after, retry on mismatch.
-  - localCheckpoint is not fault-tolerant: losing an executor during the
-    write fails the job (acceptable for bounded control tables; use
-    reliable checkpoint/Delta where that matters).
+Crash contract (every crash point either works or fails loudly):
+  - before step 6 the live table is the committed pre-write state; the
+    next writer discards the stale staging;
+  - from step 6 on the table is VISIBLY uncommitted (read_bucketed_control
+    refuses) and the next merge_upsert or delete_keys FIRST finishes the
+    swap from the manifest (steps 7-8), so no crash window loses a row:
+    each bucket's new rows sit in staging until the rename that publishes
+    them, and a live directory is never deleted, only renamed aside. The
+    manifest's type decides a bucket with no staged directory: `e` means
+    erased (the live copy goes), `s` means already published (left alone);
+  - a crash after step 8's staging delete but before the marker leaves the
+    complete new state without a marker; re-running the same write
+    re-commits it (both writes are idempotent: coalesce(update, stored)
+    applied twice is the same row, and deleting an absent key is a no-op).
 
-Cost per merge is O(|affected buckets| + |updates|), independent of total
+Consistency contract (narrower than Delta's — stated, not implied):
+  - SINGLE WRITER. There is no commit log or lock; two concurrent writers
+    on one path can interleave swaps and lose one writer's changes.
+    Serialize writers externally (the reference's Lambda is effectively
+    single-writer too).
+  - `_COMMIT` tokens give readers a consistent-view guard WITHOUT a Delta
+    log: capture read_commit_token before a read, re-check after, retry
+    on mismatch. Renames are atomic on local FS and HDFS; on S3-style
+    stores a rename is copy+delete and the guard weakens to
+    read-after-write.
+
+Cost per write is O(|affected buckets| + |input|), independent of total
 table size once B spreads keys: point updates touch ~1 bucket, a batch of
-u updates at most min(u, B). CSV compatibility (write_control_csv) remains
+u keys at most min(u, B). CSV compatibility (write_control_csv) remains
 the export sink; this is the system of record.
 
 Update semantics match the reference's column-wise point update: a
@@ -122,9 +135,9 @@ def read_small_file(spark: SparkSession, path: str) -> bytes | None:
         return None
     stream = fs.open(p)
     try:
-        baos = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 65536, False)
-        return bytes(baos.toByteArray())
+        buf = jvm.java.io.ByteArrayOutputStream()
+        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, buf, 65536, False)
+        return bytes(buf.toByteArray())
     finally:
         stream.close()
 
@@ -169,15 +182,15 @@ def read_bucketed_control(
 
     require_commit=True (default) refuses a table with no `_COMMIT`
     marker — either initialization never finished or a writer crashed
-    after overwriting some buckets (re-run the same merge to heal, which
+    mid-swap (re-run the same merge or delete: it finishes the swap and
     rewrites the marker). For an overlap-detection guard, capture
     read_commit_token before and re-check after materializing."""
     if require_commit and read_commit_token(spark, path) is None:
         raise RuntimeError(
             f"bucketed control table at {path} has no {_COMMIT} marker — "
             "initialization incomplete or a writer crashed mid-commit; "
-            "re-run the merge to heal, or pass require_commit=False to "
-            "read the possibly-inconsistent state"
+            "re-run the same merge or delete to heal, or pass "
+            "require_commit=False to read the possibly-inconsistent state"
         )
     # mergeSchema reconciles buckets written before an additive schema
     # evolution (merge_upsert widening) with buckets written after it:
@@ -248,6 +261,112 @@ def merged_relation(
     )
 
 
+_STAGING, _TRASH = ".delete_staging", ".delete_trash"
+
+
+def _rename(fs, src, dst) -> None:
+    # FileSystem.rename reports failure by return value, not exception;
+    # going on after a failed rename could nest the staged dir inside
+    # a live one that never stepped aside
+    if not fs.rename(src, dst):
+        raise IOError(f"bucket swap: rename {src} -> {dst} failed")
+
+
+def _finish_swap(spark: SparkSession, path: str) -> None:
+    """Steps 7-8 of the staged bucket swap (module docstring), driven
+    by the `_AFFECTED` manifest plus any staged bucket directory it
+    does not name (an untyped or missing line reads as `s`, the
+    non-destructive state). Run by the writer itself right after it
+    drops `_COMMIT`, and by _heal_swap after a crash; idempotent, since
+    a bucket whose staged copy already published is left alone and
+    trash only ever holds superseded content."""
+    fs, p = _fs_and_path(spark, path)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    staging, trash = hpath(p, _STAGING), hpath(p, _TRASH)
+    states: dict[str, str] = {}
+    raw = read_small_file(spark, f"{path}/{_STAGING}/_AFFECTED")
+    for line in (raw or b"").decode().split():
+        bucket, _, state = line.partition(":")
+        states[f"bucket={bucket}"] = state or "s"
+    if fs.exists(staging):
+        for st in fs.listStatus(staging):
+            if st.getPath().getName().startswith("bucket="):
+                states.setdefault(st.getPath().getName(), "s")
+    for name, state in sorted(states.items()):
+        src, dst = hpath(staging, name), hpath(p, name)
+        aside = hpath(trash, name)
+        staged = state == "s" and fs.exists(src)
+        if (state == "e" or staged) and fs.exists(dst):
+            fs.mkdirs(trash)
+            fs.delete(aside, True)  # stale trash from a healed prior crash
+            _rename(fs, dst, aside)  # atomic: the live copy steps aside
+        if staged:
+            _rename(fs, src, dst)  # atomic: the new rows publish in one op
+    fs.delete(trash, True)
+    fs.delete(staging, True)
+    write_commit_marker(spark, path)
+
+
+def _heal_swap(spark: SparkSession, path: str) -> None:
+    """Step 1: with staging or trash left behind and `_COMMIT` absent, a
+    writer crashed mid-swap — finish it. With `_COMMIT` present the
+    crash came before the swap began, so the leftovers are stale."""
+    fs, p = _fs_and_path(spark, path)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    staging, trash = hpath(p, _STAGING), hpath(p, _TRASH)
+    if not (fs.exists(staging) or fs.exists(trash)):
+        return
+    if fs.exists(hpath(p, _COMMIT)):
+        fs.delete(staging, True)
+        fs.delete(trash, True)
+    else:
+        _finish_swap(spark, path)
+
+
+def _rewrite_buckets(
+    spark: SparkSession,
+    path: str,
+    keyed: DataFrame,
+    key_col: str,
+    n_buckets: int,
+    new_rows,
+) -> None:
+    """The one staged bucket swap behind merge_upsert and delete_keys
+    (steps 1-8 of the module docstring). `new_rows(existing, keyed)`
+    maps the affected buckets' stored rows and the bucketed input to
+    the buckets' complete new content; a bucket it leaves empty is
+    erased."""
+    _heal_swap(spark, path)
+    keyed = keyed.withColumn("bucket", bucket_expr(key_col, n_buckets))
+    affected = [
+        r["bucket"] for r in keyed.select("bucket").distinct().collect()
+    ]
+    if not affected:
+        return
+    existing = spark.read.parquet(path).filter(F.col("bucket").isin(affected))
+    staging = f"{path}/{_STAGING}"
+    # staged fully on disk, not cached: a recompute after the swap began
+    # would read renamed-away files
+    (
+        new_rows(existing, keyed)
+        .repartition("bucket")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(staging)
+    )
+    fs, _ = _fs_and_path(spark, staging)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    # typed NOW, while knowable: after a partial swap a missing staged
+    # directory is ambiguous (erased vs already published)
+    lines = [
+        f"{b}:{'s' if fs.exists(hpath(f'{staging}/bucket={b}')) else 'e'}"
+        for b in affected
+    ]
+    write_small_file(spark, f"{staging}/_AFFECTED", "\n".join(lines).encode())
+    fs.delete(hpath(f"{path}/{_COMMIT}"), False)
+    _finish_swap(spark, path)
+
+
 def merge_upsert(
     spark: SparkSession,
     path: str,
@@ -259,48 +378,14 @@ def merge_upsert(
 
     Matched keys: each non-NULL update column replaces the stored value
     (NULL preserves — see module docstring). Unmatched keys insert.
-    Only partitions whose bucket contains an updated key are read (parquet
-    partition pruning on the bucket filter) and rewritten (dynamic
-    partition overwrite); every other bucket's files are untouched.
-
-    The affected-bucket list is collected to the driver — bounded by
-    n_buckets (a layout constant, like a shuffle-partition count), never
-    by data size.
-
-    Commit protocol: the marker is DROPPED before the bucket overwrites
-    and re-written (fresh token) after the last bucket lands — a crash
-    anywhere in between leaves the table visibly uncommitted
-    (read_bucketed_control refuses) instead of silently half-merged.
+    Only buckets containing an updated key are read and rewritten,
+    through the staged bucket swap; every other bucket's files are
+    untouched. A swap a crashed writer left pending is finished first.
     """
-    upd = updates.withColumn("bucket", bucket_expr(key_col, n_buckets))
-    affected = [r["bucket"] for r in upd.select("bucket").distinct().collect()]
-    if not affected:
-        return
-    existing = spark.read.parquet(path).filter(F.col("bucket").isin(affected))
-    merged = merged_relation(existing, upd, key_col)
-    # materialize before writing: Spark (correctly) refuses to overwrite a
-    # path its plan is still reading. The materialized set is the merge
-    # working set only — affected buckets + updates — never the table.
-    merged = merged.localCheckpoint(eager=True)
-    # invalidate the marker FIRST: if the bucket overwrite below dies
-    # part-way, readers see "uncommitted", not a silently mixed table
-    jvm = spark._jvm
-    fs, _ = _fs_and_path(spark, path)
-    marker = jvm.org.apache.hadoop.fs.Path(f"{path}/{_COMMIT}")
-    if fs.exists(marker):
-        fs.delete(marker, False)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            merged.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    write_commit_marker(spark, path)
+    _rewrite_buckets(
+        spark, path, updates, key_col, n_buckets,
+        lambda existing, upd: merged_relation(existing, upd, key_col),
+    )
 
 
 def delete_keys(
@@ -311,158 +396,16 @@ def delete_keys(
     n_buckets: int = 64,
 ) -> None:
     """Hard-DELETE the given keys from the bucket-partitioned table —
-    the GDPR/right-to-erasure primitive.  Same bucket discipline as
-    merge_upsert: only partitions whose bucket contains a requested key
-    are read (partition pruning on the bucket filter) and rewritten
-    with an ANTI join against the key set; every other bucket's files
-    are untouched, so the rewrite cost scales with the delete set's
-    bucket spread, never the table size.  A bucket whose every row is
-    deleted loses its partition directory entirely.
-
-    Protocol: survivors are staged fully materialized to a hidden
-    `.delete_staging` directory BEFORE any live file is touched, then
-    each affected bucket directory swaps via ATOMIC RENAMES only —
-    live renames into a `.delete_trash` sibling, staged renames into
-    place — never a delete of a directory that still holds the only
-    copy of anything (fs.delete is non-atomic on local FS and S3A, so
-    a crash mid-delete would leave a PRESENT-but-partial directory a
-    presence-based heal cannot distinguish from a whole one).  The
-    `_COMMIT` marker drops before the first swap and is re-written
-    after the last, so a crash anywhere leaves the table VISIBLY
-    uncommitted (read_bucketed_control refuses).  Re-running ANY
-    delete first heals: while the marker is absent, every bucket still
-    present in staging is authoritative — the live directory (whole or
-    partial) moves to trash and the staged copy renames into place —
-    so no crash window can lose a survivor: before the marker drops
-    the live data is intact; after it, each bucket's survivors exist
-    in staging until the instant an atomic rename publishes them.
+    the GDPR/right-to-erasure primitive. Only buckets containing a
+    requested key are read and rewritten (an ANTI join against the key
+    set), through the staged bucket swap, so the cost scales with the
+    delete set's bucket spread, never the table size. A bucket whose
+    every row is deleted loses its directory entirely (the `e` manifest
+    state). A swap a crashed writer left pending is finished first.
     """
-    fs, p = _fs_and_path(spark, path)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    staging = hpath(p, ".delete_staging")
-    trash = hpath(p, ".delete_trash")
-
-    # Heal a crashed previous swap BEFORE reading the table.
-    if fs.exists(staging) or fs.exists(trash):
-        if not fs.exists(hpath(p, _COMMIT)):
-            # Mid-swap crash: for every AFFECTED bucket (the `_AFFECTED`
-            # manifest written with the staging), the staged copy is the
-            # authoritative post-delete content — and a manifest bucket
-            # with NO staged directory was fully erased, so its live
-            # directory must go too (without the manifest, a crash
-            # before a fully-erased bucket's removal would silently keep
-            # its deleted keys and the heal would re-commit them). The
-            # live dir may be whole, partial, or already trashed — all
-            # superseded. Trash content is always droppable: a directory
-            # only enters trash after its replacement (or erasure) was
-            # fully staged/recorded.
-            if fs.exists(staging):
-                manifest = hpath(staging, "_AFFECTED")
-                # bucket-name -> 'e' (fully erased: live dir must go) or
-                # 's' (staged survivors: the staged copy is
-                # authoritative). The DISTINCTION must come from the
-                # manifest, not from staged-dir presence: after a
-                # PARTIAL swap a staged dir is absent either because the
-                # bucket was erased OR because its rename already
-                # published it — and treating a published bucket as
-                # erased would trash its survivors (the exact data-loss
-                # window this typed manifest closes).
-                states: dict[str, str] = {}
-                raw = read_small_file(spark, manifest.toString())
-                if raw is not None:
-                    for line in raw.decode().split():
-                        if not line:
-                            continue
-                        bucket, _, state = line.partition(":")
-                        # untyped legacy line: default to the
-                        # NON-destructive interpretation
-                        states[f"bucket={bucket}"] = state or "s"
-                for st in fs.listStatus(staging):
-                    n_ = st.getPath().getName()
-                    if n_.startswith("bucket="):
-                        states.setdefault(n_, "s")
-                for name in sorted(states):
-                    dst = hpath(p, name)
-                    src = hpath(staging, name)
-                    if states[name] == "e":
-                        # fully erased: any live dir is superseded
-                        if fs.exists(dst):
-                            fs.mkdirs(trash)
-                            tb = hpath(trash, name)
-                            fs.delete(tb, True)
-                            fs.rename(dst, tb)
-                    elif fs.exists(src):
-                        # staged survivors not yet published: swap now
-                        if fs.exists(dst):
-                            fs.mkdirs(trash)
-                            tb = hpath(trash, name)
-                            fs.delete(tb, True)
-                            fs.rename(dst, tb)
-                        fs.rename(src, dst)
-                    # else: staged bucket whose rename already
-                    # published — dst IS the survivors; leave it alone
-            fs.delete(trash, True)
-            fs.delete(staging, True)
-            # the heal completes the CRASHED operation — re-commit its
-            # end state now, even if this call has no work itself
-            write_commit_marker(spark, path)
-        else:
-            # Crash BEFORE the marker dropped: the live table is still
-            # the committed pre-delete state and staging/trash are
-            # stale artifacts of an operation that never began its swap.
-            fs.delete(staging, True)
-            fs.delete(trash, True)
-
-    k = keys.select(F.col(key_col)).distinct().withColumn(
-        "bucket", bucket_expr(key_col, n_buckets)
+    _rewrite_buckets(
+        spark, path, keys.select(key_col).distinct(), key_col, n_buckets,
+        lambda existing, k: existing.join(
+            k.select(key_col), key_col, "left_anti"
+        ),
     )
-    affected = [r["bucket"] for r in k.select("bucket").distinct().collect()]
-    if not affected:
-        return
-    existing = spark.read.parquet(path).filter(F.col("bucket").isin(affected))
-    kept = existing.join(k.select(key_col), key_col, "left_anti")
-
-    # Stage the survivors to a DOT-directory inside the table (hidden
-    # from parquet directory listings), fully materialized on disk
-    # BEFORE any old file is dropped — caching instead would be
-    # eviction-unsafe: a recompute after the drop would read deleted
-    # files. Then swap per bucket. Dynamic partition overwrite cannot
-    # be used here: it only touches partitions PRESENT in the written
-    # data, so a fully-emptied bucket would keep its old files.
-    (
-        kept.repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(str(staging))
-    )
-    # Affected-bucket manifest, TYPED per bucket: 'e' = fully erased (no
-    # survivors staged; the live dir must be removed), 's' = survivors
-    # staged. The type must be recorded here, while it is still
-    # knowable: during a heal after a partial swap, a missing staged dir
-    # is ambiguous (erased vs already-published) and guessing 'erased'
-    # would trash published survivors.
-    lines = [
-        f"{b}:{'s' if fs.exists(hpath(staging, f'bucket={b}')) else 'e'}"
-        for b in affected
-    ]
-    out = fs.create(hpath(staging, "_AFFECTED"), True)
-    try:
-        out.write(bytearray("\n".join(lines).encode()))
-    finally:
-        out.close()
-
-    fs.delete(hpath(p, _COMMIT), False)
-    fs.mkdirs(trash)
-    for b in affected:
-        dst = hpath(p, f"bucket={b}")
-        src = hpath(staging, f"bucket={b}")
-        if fs.exists(dst):
-            tb = hpath(trash, f"bucket={b}")
-            fs.delete(tb, True)  # stale trash from a healed prior crash
-            fs.rename(dst, tb)  # atomic: live steps aside, still whole
-        if fs.exists(src):  # absent = bucket fully erased
-            fs.rename(src, dst)  # atomic: survivors publish in one op
-    fs.delete(trash, True)
-    fs.delete(staging, True)
-    write_commit_marker(spark, path)

@@ -130,11 +130,11 @@ def _write_version(
     """Write `df` (carrying a bucket column) as the immutable v-dir for
     `version`; returns the bucket ids written (bounded by n_buckets).
 
-    No checkpoint and ONE action: v-dirs are immutable, so unlike
-    merge_upsert this write never overwrites files its own plan reads,
-    and the written-bucket list comes from a directory listing of the
-    fresh v-dir (bounded by n_buckets) instead of a second pass over
-    the data — an init of an arbitrarily large table stays one job.
+    No checkpoint and ONE action: v-dirs are immutable, so this write
+    never overwrites files its own plan reads, and the written-bucket
+    list comes from a directory listing of the fresh v-dir (bounded by
+    n_buckets) instead of a second pass over the data — an init of an
+    arbitrarily large table stays one job.
 
     Overwrite mode is pinned STATIC for the write: a crashed previous
     writer may have left a partial v-dir for this same version, and

@@ -1,38 +1,44 @@
-"""MULTI-TABLE atomic transactions over plain parquet — the catalog-
-level pointer swap that gives a GROUP of tables one commit point.
+"""Atomic transactions over plain parquet — one version pointer that
+gives a table, or a GROUP of tables, one commit point.
 
-Single-table layouts (sources/snapshots.py's manifests, deletion.py's
-_BASE pointer) make each table individually atomic, but a reader
-joining TWO tables can still see table A at version n and table B at
-version n-1 — the classic cross-table anomaly (Iceberg/Delta have the
-same gap at the table level; engines close it with a catalog-level
-transaction pointer, which is what this module builds).
+A reader joining TWO tables that each commit on their own can see
+table A at version n and table B at version n-1 — the classic
+cross-table anomaly (Iceberg/Delta have the same gap at the table
+level; engines close it with a catalog-level transaction pointer,
+which is what this module builds). The same pointer serves a single
+table: sources/deletion.py's merge-on-read tables are one-table
+transaction roots holding `base` and `_dv`.
 
-Layout (the deletion.py idiom, lifted one level):
+Layout:
 
     {root}/{table}-v{N}/   immutable data dirs, one per table per txn
     {root}/_TXN            pointer file naming the committed version N
                            (tmp + atomic FileContext Rename.OVERWRITE
                            via merge.py:write_small_file, swapped LAST)
 
-Protocol: `commit_txn` writes EVERY table's v{N+1} dir first, then
-flips the single pointer — so all tables become visible together, or
-none do. Crash points: dying during any table write leaves the pointer
-at N (all staged dirs are garbage; retry overwrites them); dying after
-the swap leaves the v{N} dirs as garbage for `vacuum_txn_versions`.
-A reader resolves the pointer ONCE and reads a consistent table set —
-there is no instant where a join can mix versions. WRITERS serialize
-(single-writer contract, as everywhere in this repo's layouts);
-READERS never do.
+Every path goes through the Hadoop FileSystem API, so a root may be a
+plain path or any URI the session's Hadoop conf resolves (file://,
+hdfs://, s3a://).
+
+Protocol: `stage_txn` writes EVERY table's v{N+1} dir, `publish_txn`
+flips the single pointer, and `commit_txn` is the two in a row — so
+all tables become visible together, or none do. Crash points: dying
+during any table write leaves the pointer at N (all staged dirs are
+garbage; retry overwrites them); dying after the swap leaves the v{N}
+dirs as garbage for `vacuum_txn_versions`. A reader resolves the
+pointer ONCE and reads a consistent table set — there is no instant
+where a join can mix versions. WRITERS serialize (single-writer
+contract, as everywhere in this repo's layouts); READERS never do.
 """
 
 from __future__ import annotations
 
-import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
 from citydata_etl_spark.sources.merge import (
+    _fs_and_path,
     read_small_file as _read_small_file,
     write_small_file as _write_small_file,
 )
@@ -41,12 +47,23 @@ _POINTER = "_TXN"
 
 
 def _table_dir(root: str, table: str, version: int) -> str:
-    return os.path.join(root, f"{table}-v{version}")
+    return f"{root}/{table}-v{version}"
 
 
 def txn_version(spark: SparkSession, root: str) -> int | None:
-    raw = _read_small_file(spark, os.path.join(root, _POINTER))
+    raw = _read_small_file(spark, f"{root}/{_POINTER}")
     return None if raw is None else int(raw.decode("ascii"))
+
+
+def _committed_version(spark: SparkSession, root: str) -> int:
+    """The committed version; raises when the root has none (no
+    commit ever ran, or its pointer swap did not)."""
+    version = txn_version(spark, root)
+    if version is None:
+        raise RuntimeError(
+            f"transaction root at {root} has no committed version"
+        )
+    return version
 
 
 def commit_txn(
@@ -57,14 +74,7 @@ def commit_txn(
     crash heals), the one pointer swap LAST. Returns the committed
     version. All-or-nothing across the whole table set by the
     atomicity of the single rename."""
-    cur = txn_version(spark, root)
-    nxt = 0 if cur is None else cur + 1
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(_table_dir(root, name, nxt))
-    _write_small_file(
-        spark, os.path.join(root, _POINTER), str(nxt).encode("ascii")
-    )
-    return nxt
+    return publish_txn(spark, root, stage_txn(spark, root, tables))
 
 
 def stage_txn(
@@ -103,10 +113,10 @@ def read_staged_table(
 
 def publish_txn(spark: SparkSession, root: str, version: int) -> int:
     """PUBLISH half of write-audit-publish: flip the pointer to an
-    already-staged version (one atomic rename — same crash contract
-    as commit_txn's final step). Refuses to publish backwards or a
-    version whose predecessor isn't the current pointer, so a stale
-    audit can never resurrect an old staging.
+    already-staged version (one atomic rename — the commit point of
+    commit_txn too). Refuses to publish backwards or a version whose
+    predecessor isn't the current pointer, so a stale audit can never
+    resurrect an old staging.
 
     SINGLE-WRITER contract: the read-check-then-write of the pointer
     is TOCTOU under concurrent publishers — the guard catches STALE
@@ -120,7 +130,7 @@ def publish_txn(spark: SparkSession, root: str, version: int) -> int:
             f"committed {cur!r} (expected {expect}) — stale staging"
         )
     _write_small_file(
-        spark, os.path.join(root, _POINTER), str(version).encode("ascii")
+        spark, f"{root}/{_POINTER}", str(version).encode("ascii")
     )
     return version
 
@@ -140,36 +150,23 @@ def read_txn_table(
         b = read_txn_table(spark, root, "b", v)
     """
     if version is None:
-        version = txn_version(spark, root)
-        if version is None:
-            raise RuntimeError(
-                f"transaction root at {root} has no committed version"
-            )
+        version = _committed_version(spark, root)
     return spark.read.parquet(_table_dir(root, table, version))
 
 
 def vacuum_txn_versions(spark: SparkSession, root: str) -> list[int]:
     """Reclaim every superseded version's table dirs, keeping the live
-    transaction. Same maintenance contract as deletion.py's vacuum:
-    run after in-flight readers of old versions drain — a pinned
-    time-travel reader loses its files here, never to a commit."""
-    import re
-    import shutil
-
-    live = txn_version(spark, root)
-    if live is None:
-        # No committed pointer: every staged dir belongs to an
-        # in-flight FIRST commit. Deleting them would destroy that
-        # commit, so refuse — matching deletion.py's _live_version,
-        # which raises on a missing pointer rather than guessing.
-        raise RuntimeError(
-            f"transaction root at {root} has no committed version; "
-            "refusing to vacuum staged dirs of an in-flight first commit"
-        )
+    transaction. MAINTENANCE OP: run it after in-flight readers of old
+    versions drain — a pinned time-travel reader loses its files here,
+    never to a commit. Refuses a root with no committed pointer: every
+    dir there belongs to an in-flight FIRST commit. Returns the
+    versions removed."""
+    live = _committed_version(spark, root)
+    fs, p = _fs_and_path(spark, root)
     removed = set()
-    for name in os.listdir(root):
-        m = re.fullmatch(r".+-v(\d+)", name)
+    for st in fs.listStatus(p):
+        m = re.fullmatch(r".+-v(\d+)", st.getPath().getName())
         if m and int(m.group(1)) != live:
-            shutil.rmtree(os.path.join(root, name))
+            fs.delete(st.getPath(), True)
             removed.add(int(m.group(1)))
     return sorted(removed)

@@ -123,14 +123,19 @@ def foreach_batch_upsert(
     """Streaming CDC UPSERT: each micro-batch is reduced to its latest
     change per key (max_by on the version column — map-side combinable),
     then MERGEd into the bucket-partitioned table (sources/merge.py:
-    merge_upsert — only affected buckets rewritten, _COMMIT marker
-    last).  This is the lakehouse streaming-upsert loop: an unbounded
-    change feed continuously folded into a keyed table, with per-batch
-    cost proportional to the batch's key spread, not the table size.
+    merge_upsert — only affected buckets rewritten through the staged
+    bucket swap, _COMMIT marker last).  This is the lakehouse
+    streaming-upsert loop: an unbounded change feed continuously folded
+    into a keyed table, with per-batch cost proportional to the batch's
+    key spread, not the table size.
 
     The checkpoint makes re-invocation incremental (processed files are
-    never re-merged); exactly-once lands on the merge being atomic per
-    batch via the commit marker.  Batches apply in file order, so a feed
+    never re-merged).  A batch whose merge crashed is re-run by the
+    restarted query; the merge first finishes any swap the crash left
+    pending, and re-applying a batch is idempotent (latest version per
+    key, coalesce semantics), so each batch lands once in effect.
+    Readers see no partial batch: the marker is absent from the swap's
+    start until its end.  Batches apply in file order, so a feed
     whose later files carry higher versions (every CDC log does) folds
     to latest-version-wins.
     """

@@ -1535,6 +1535,93 @@ def test_update_dedup_index_incremental_semantics(spark, tmp_path):
     assert len(untouched) >= len(files_after_b1) - 1
 
 
+def test_update_dedup_index_retry_heals_mid_swap_crash(spark, tmp_path):
+    """A batch whose merge crashed mid-swap — `_COMMIT` dropped, an
+    affected bucket's live directory renamed aside, its merged copy
+    still staged — heals on the retry of that batch: the merge's heal
+    finishes the swap and the index is first-arrival-wins. An absent
+    marker with NO pending swap still refuses, and the recovery the
+    refusal names (re-commit a complete index) works."""
+    import os
+    import shutil
+
+    import pytest
+
+    from citydata_etl_spark.operators.dedup import update_dedup_index
+    from citydata_etl_spark.sources import merge as M
+
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta"),
+            (2, "Alpha  beta!"),
+            (3, "gamma"),
+            (4, "delta"),
+            (5, "gamma"),
+            (6, "epsilon"),
+        ],
+        "doc_id LONG, text STRING",
+    )
+    batches = [
+        docs.filter("doc_id <= 2"),
+        docs.filter("doc_id IN (3, 4)"),
+        docs.filter("doc_id IN (5, 6)"),
+    ]
+    path, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
+    # one bucket: batch 2's affected bucket already has a live directory
+    for no, batch in enumerate(batches):
+        update_dedup_index(spark, ref, batch, batch_no=no, n_buckets=1)
+        if no < 2:
+            update_dedup_index(spark, path, batch, batch_no=no, n_buckets=1)
+
+    def rows(p):
+        return {
+            tuple(r) for r in spark.read.parquet(p)
+            .select("norm_sha", "keep_doc_id", "first_seen_batch", "bucket")
+            .collect()
+        }
+
+    affected = sorted({r[3] for r in rows(ref) - rows(path)})
+    assert affected == [0]  # batch 2 brings new content ("epsilon")
+
+    # batch 2's crash: merged buckets staged (the reference run's copy),
+    # typed manifest written, marker dropped, the live bucket aside
+    staging = os.path.join(path, ".delete_staging")
+    for b in affected:
+        shutil.copytree(
+            os.path.join(ref, f"bucket={b}"),
+            os.path.join(staging, f"bucket={b}"),
+        )
+    with open(os.path.join(staging, "_AFFECTED"), "w") as f:
+        f.write("\n".join(f"{b}:s" for b in affected))
+    os.remove(os.path.join(path, M._COMMIT))
+    os.makedirs(os.path.join(path, ".delete_trash"))
+    shutil.move(
+        os.path.join(path, f"bucket={affected[0]}"),
+        os.path.join(path, ".delete_trash", f"bucket={affected[0]}"),
+    )
+
+    update_dedup_index(  # the retry
+        spark, path, batches[2], batch_no=2, n_buckets=1
+    )
+
+    def index(p):
+        return {
+            r["keep_doc_id"]: r["first_seen_batch"]
+            for r in M.read_bucketed_control(spark, p).collect()
+        }
+
+    assert index(path) == index(ref) == {1: 0, 3: 1, 4: 1, 6: 2}
+    assert not os.path.exists(staging)
+
+    # no swap pending: still a loud refusal, naming a working recovery
+    os.remove(os.path.join(path, M._COMMIT))
+    with pytest.raises(RuntimeError, match="write_commit_marker"):
+        update_dedup_index(spark, path, batches[2], batch_no=2, n_buckets=1)
+    M.write_commit_marker(spark, path)
+    update_dedup_index(spark, path, batches[2], batch_no=2, n_buckets=1)
+    assert index(path) == {1: 0, 3: 1, 4: 1, 6: 2}
+
+
 def test_winnowing_matches_python_reference(spark):
     """winnowing_fingerprints equals a direct Python transcription of
     robust winnowing (rightmost minimal hash per window) on synthetic

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from citydata_etl_spark.etl.collect import collect_run
@@ -549,11 +550,35 @@ def test_referential_violations_orphans_and_null_fk(spark):
     assert (r["rule"], r["n_violations"], r["n_rows"]) == ("fk_check", 2, 5)
 
 
-def test_delete_keys_mid_swap_crash_recovers_survivors(spark, tmp_path):
+def _write_after_crash(spark, path, writer):
+    """The write that runs after a crashed bucket swap and must heal it
+    first: a delete of an absent key, or an unrelated merge (a new
+    total for key 1, which every crash test here keeps). Neither
+    changes the table's id set."""
+    from citydata_etl_spark.sources import merge as M
+
+    if writer == "delete_keys":
+        M.delete_keys(
+            spark, path,
+            spark.createDataFrame([(999_999,)], "id LONG"), "id", n_buckets=4,
+        )
+    else:
+        M.merge_upsert(
+            spark, path,
+            spark.createDataFrame([(1, -1)], "id LONG, total LONG"), "id",
+            n_buckets=4,
+        )
+
+
+@pytest.mark.parametrize("writer", ["delete_keys", "merge_upsert"])
+def test_delete_keys_mid_swap_crash_recovers_survivors(
+    spark, tmp_path, writer
+):
     """The worst crash window: a bucket's live directory was deleted but
-    its staged survivors were not yet renamed in. The next delete_keys
-    call must FIRST complete the swap from .delete_staging — no survivor
-    is ever lost."""
+    its staged survivors were not yet renamed in. The next write —
+    delete_keys or merge_upsert, which share the swap — must FIRST
+    complete the swap from .delete_staging — no survivor is ever
+    lost."""
     import os
     import shutil
 
@@ -578,14 +603,8 @@ def test_delete_keys_mid_swap_crash_recovers_survivors(spark, tmp_path):
     )
     os.remove(os.path.join(path, M._COMMIT))
 
-    # a later (disjoint, even empty-effect) delete must heal first
-    M.delete_keys(
-        spark,
-        path,
-        spark.createDataFrame([(999_999,)], "id LONG"),
-        "id",
-        n_buckets=4,
-    )
+    # a later (disjoint, even empty-effect) write must heal first
+    _write_after_crash(spark, path, writer)
     healed = {r["id"] for r in
               M.read_bucketed_control(spark, path).select("id").collect()}
     assert healed == survivors
@@ -690,7 +709,10 @@ def test_canonicalize_url_noise_classes(spark):
         assert r["got"] == r["want"], (r["got"], r["want"])
 
 
-def test_delete_keys_heal_completes_fully_erased_bucket(spark, tmp_path):
+@pytest.mark.parametrize("writer", ["delete_keys", "merge_upsert"])
+def test_delete_keys_heal_completes_fully_erased_bucket(
+    spark, tmp_path, writer
+):
     """A fully-erased bucket stages NO survivor directory; only the
     `_AFFECTED` manifest records that its live directory must go. A crash
     before that bucket's removal used to leave its deleted keys live —
@@ -739,11 +761,8 @@ def test_delete_keys_heal_completes_fully_erased_bucket(spark, tmp_path):
         f.write(f"{full_b}:e\n{part_b}:s\n")
     os.remove(os.path.join(path, M._COMMIT))
 
-    # any later delete must heal first
-    M.delete_keys(
-        spark, path,
-        spark.createDataFrame([(999_999,)], "id LONG"), "id", n_buckets=4,
-    )
+    # any later write must heal first
+    _write_after_crash(spark, path, writer)
     back = {r["id"] for r in
             M.read_bucketed_control(spark, path).select("id").collect()}
     assert back == set(range(100)) - erased
@@ -1338,7 +1357,7 @@ def test_deletion_vectors_never_touch_base_files(spark, tmp_path):
     rows. Also pins the atomic-pointer swap contract: a reader plan
     built BEFORE the purge (pointer already resolved to v0) still
     collects correctly AFTER it (old version retained), and only
-    vacuum_mor_versions reclaims the superseded dirs."""
+    vacuum_txn_versions reclaims the superseded dirs."""
     import glob
     import os
 
@@ -1348,8 +1367,11 @@ def test_deletion_vectors_never_touch_base_files(spark, tmp_path):
         append_deletion_vector,
         purge_deletions,
         read_mor_table,
-        vacuum_mor_versions,
         write_mor_table,
+    )
+    from citydata_etl_spark.sources.transactions import (
+        txn_version,
+        vacuum_txn_versions,
     )
 
     root = str(tmp_path / "mor")
@@ -1384,13 +1406,13 @@ def test_deletion_vectors_never_touch_base_files(spark, tmp_path):
     purge_deletions(spark, root, "k")
     assert pre_swap_reader.count() == want.count()  # v0 still on disk
 
-    assert open(os.path.join(root, "_BASE")).read() == "1"
+    assert txn_version(spark, root) == 1
     assert not os.path.exists(os.path.join(root, "_dv-v1"))  # fresh side
     after = read_mor_table(spark, root, "k")
     assert after.count() == want.count()
     assert after.exceptAll(want).count() == 0
 
-    assert vacuum_mor_versions(spark, root) == [0]
+    assert vacuum_txn_versions(spark, root) == [0]
     assert not os.path.exists(os.path.join(root, "base-v0"))
     assert not os.path.exists(os.path.join(root, "_dv-v0"))
     assert read_mor_table(spark, root, "k").count() == want.count()
@@ -1415,6 +1437,7 @@ def test_deletion_vector_purge_crash_points(spark, tmp_path):
         read_mor_table,
         write_mor_table,
     )
+    from citydata_etl_spark.sources.transactions import txn_version
 
     root = str(tmp_path / "mor")
     df = spark.range(0, 200).select(
@@ -1436,12 +1459,12 @@ def test_deletion_vector_purge_crash_points(spark, tmp_path):
     read_mor_table(spark, root, "k").write.mode("overwrite").parquet(
         os.path.join(root, "base-v1")
     )
-    assert open(os.path.join(root, "_BASE")).read() == "0"
+    assert txn_version(spark, root) == 0
     assert read_mor_table(spark, root, "k").count() == want.count()
 
     # the retried purge heals both: overwrites the staged dir, swaps
     purge_deletions(spark, root, "k")
-    assert open(os.path.join(root, "_BASE")).read() == "1"
+    assert txn_version(spark, root) == 1
     got = read_mor_table(spark, root, "k")
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
@@ -1516,6 +1539,58 @@ def test_multi_table_txn_atomicity_and_crash_points(spark, tmp_path):
     with _pytest.raises(RuntimeError, match="no committed version"):
         vacuum_txn_versions(spark, fresh)
     assert os.path.exists(os.path.join(fresh, "a-v0"))
+
+
+def test_mor_and_txn_round_trips_on_uri_roots(spark, tmp_path):
+    """A merge-on-read table and a transaction root may be named by a
+    URI (file://...), as every Hadoop-FS path may: tombstoned keys are
+    invisible, purge folds them into v1, and vacuum reclaims v0; a
+    two-table transaction commits, reads at one version and vacuums
+    the same way."""
+    from citydata_etl_spark.sources.deletion import (
+        append_deletion_vector,
+        purge_deletions,
+        read_mor_table,
+        write_mor_table,
+    )
+    from citydata_etl_spark.sources.transactions import (
+        commit_txn,
+        read_txn_table,
+        txn_version,
+        vacuum_txn_versions,
+    )
+
+    df = spark.range(0, 100).select(F.col("id").alias("k"))
+    want = {i for i in range(100) if i % 10 != 0}
+    mor = (tmp_path / "mor").as_uri()
+    assert mor.startswith("file:")
+
+    def visible():
+        return {r["k"] for r in read_mor_table(spark, mor, "k").collect()}
+
+    write_mor_table(df, mor)
+    append_deletion_vector(df.filter(F.col("k") % 10 == 0), mor)
+    assert visible() == want
+    purge_deletions(spark, mor, "k")
+    assert txn_version(spark, mor) == 1
+    assert visible() == want
+    assert vacuum_txn_versions(spark, mor) == [0]
+    assert not (tmp_path / "mor" / "base-v0").exists()
+    assert not (tmp_path / "mor" / "_dv-v0").exists()
+    assert visible() == want
+
+    txn = (tmp_path / "txn").as_uri()
+    assert commit_txn(spark, txn, {"a": df, "b": df}) == 0
+    half = df.filter(F.col("k") < 50)
+    assert commit_txn(spark, txn, {"a": half, "b": half}) == 1
+    v = txn_version(spark, txn)
+    pair = read_txn_table(spark, txn, "a", v).join(
+        read_txn_table(spark, txn, "b", v), "k"
+    )
+    assert pair.count() == 50
+    assert vacuum_txn_versions(spark, txn) == [0]
+    assert not (tmp_path / "txn" / "a-v0").exists()
+    assert read_txn_table(spark, txn, "b").count() == 50
 
 
 def test_sniff_csv_dialect_trap_and_precedence(spark):

@@ -951,6 +951,35 @@ def test_ahash_neardup_blocking_is_lossless(spark):
     assert (0, 4) in got
 
 
+def test_ahash_neardup_pairs_repeated_media_id(spark):
+    """A media id with several hash rows (one per frame, say) never
+    pairs with itself, and each pair comes out once, at the smallest
+    hamming over the two ids' hashes — also when an exact row
+    repeats."""
+    from citydata_etl_spark.operators.multimodal import (
+        ahash_neardup_pairs,
+    )
+
+    lo, hi = 0x12345678, 0x0ABCDEF0
+    rows = [
+        (0, lo, hi),
+        (0, lo ^ 0b1, hi),        # id 0's second frame, ham 1 from its first
+        (1, lo, hi),              # both of id 0's frames, again
+        (1, lo ^ 0b1, hi),
+        (2, lo ^ 0b11, hi),       # ham 2 from lo, 1 from lo ^ 1
+        (3, 0x7FFFFFFF, 0x55555555),
+        (3, 0x7FFFFFFF, 0x55555555),  # exact repeat of a far hash
+    ]
+    df = spark.createDataFrame(
+        rows, "media_id LONG, ahash_lo LONG, ahash_hi LONG"
+    )
+    got = sorted(
+        (r["media_a"], r["media_b"], r["hamming"])
+        for r in ahash_neardup_pairs(df, max_hamming=3).collect()
+    )
+    assert got == [(0, 1, 0), (0, 2, 1), (1, 2, 1)]
+
+
 def test_png_decode_roundtrip_all_filters_property():
     """Hypothesis: encode random small rasters (RGB and RGBA, random
     per-row filter types, optionally split IDAT) with the fixture's
